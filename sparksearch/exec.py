@@ -6,16 +6,19 @@ with DFS-global statistics baked in at build time:
   1. driver-side rewrite: analyze query text with the index's analyzer,
      normalize bool/minimum_should_match (queries.py) — the analogue of
      Rewriteable.rewrite on the coordinator.
-  2. per-clause plan: postings_for(terms) [partition-pruned scan]
-     ⋈ broadcast(stats_for(terms) with idf) → score expression — all
-     whole-stage-codegen'd JVM expressions, zero Python in the hot path.
+  2. per-clause plan: postings_for(terms) [partition-pruned scan] →
+     score expression, with each term's df/cf looked up in a literal
+     map built from the reader's cached stats_for(terms) — no stats scan
+     and no join; all whole-stage-codegen'd JVM expressions, zero Python
+     in the hot path.
   3. combine: groupBy(docid) for OR/msm, inner joins for AND, left_anti for
      must_not (SURVEY.md §2.7 set ops).
   4. global top-k: orderBy(score desc, docid asc).limit(k) — Spark's
      TakeOrderedAndProject = per-partition top-k + merge, exactly the
      reference's per-shard collector + coordinator mergeTopDocs
      (sv/action/search/SearchPhaseController.java:191-249).
-  5. fetch: broadcast join of the k-row result against docs for url — the
+  5. fetch: broadcast join of the k-row result against docs for url,
+     re-ordered by another TakeOrderedAndProject over ≤ k rows — the
      FetchPhase equivalent (sv/search/fetch/FetchPhase.java:96-268).
 
 Phrase queries intersect position arrays with built-in array functions
@@ -82,9 +85,28 @@ def _duration_seconds(v) -> float:
     return float(s)
 
 
-def _idf_col(n_docs: int) -> Column:
-    df = F.col("df").cast("double")
-    return F.log1p((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5))
+def _term_lookup(values: dict) -> Column:
+    """The row's `term` looked up in a driver-side {term: value} dict,
+    inlined as a literal map — null for a term the dict lacks."""
+    if not values:
+        return F.lit(None)
+    return F.element_at(
+        F.create_map(*[x for t, v in values.items()
+                       for x in (F.lit(t), F.lit(v))]), F.col("term"))
+
+
+def _sum_idf(n_docs: int, stats: dict, weights: dict) -> Column:
+    """Σ weight·idf over the weighted terms present in `stats` (a
+    stats_for dict), as a constant-folded literal expression: the JVM
+    evaluates the same idf arithmetic it runs per row, summed in term
+    order."""
+    total = F.lit(0.0)
+    for t in sorted(weights):
+        if t in stats:
+            df = F.lit(float(stats[t][0]))
+            idf = F.log1p((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5))
+            total = total + idf * F.lit(float(weights[t]))
+    return total
 
 
 def _tf_norm(tf: Column, dl_q: Column, avgdl: float,
@@ -142,13 +164,19 @@ class Executor:
         # the packed impact pairs are raw (max_tf, min_dlq) statistics,
         # so WAND stays exact under ANY BM25 (k1, b) — bounds are
         # re-derived at query time (wand_topk docstring); non-BM25
-        # similarities (LM/DFR/DFI/IB/boolean/scripted) use the plan path
+        # similarities (LM/DFR/DFI/IB/boolean/scripted) use the plan path.
+        # An index whose stats table predates the (max_tf, min_dlq)
+        # impact columns has no WAND bound: auto mode plans it.
+        from sparksearch.index import IMPACT_COLUMNS
         from sparksearch.similarity import BM25Similarity
         use_wand = (mode in ("auto", "wand") and isinstance(q, Match)
                     and q.fuzziness is None
                     and isinstance(self.sim, BM25Similarity)
                     and self.ix.use_segments
-                    and (mode == "wand" or self.ix.segments_cover_all()))
+                    and (mode == "wand"
+                         or (self.ix.segments_cover_all()
+                             and set(IMPACT_COLUMNS)
+                             <= set(self.ix.stats.columns))))
         if use_wand:
             # synonym-stacked analyzers need blended per-position scoring —
             # the packed-segment WAND path scores exact terms independently
@@ -168,11 +196,14 @@ class Executor:
                     .orderBy(F.col("score").desc(), F.col("docid").asc())
                     .limit(k))
         if fetch:
-            # FetchPhase: k-row result broadcast against the corpus-side dict
+            # FetchPhase: k-row result broadcast against the corpus-side
+            # dict; the limit makes the re-sort one TakeOrderedAndProject
+            # instead of a range-partitioned global sort
             topk = (self.ix.docs.select("docid", "url")
                     .join(F.broadcast(topk), "docid")
                     .select("docid", "url", "score")
-                    .orderBy(F.col("score").desc(), F.col("docid").asc()))
+                    .orderBy(F.col("score").desc(), F.col("docid").asc())
+                    .limit(k))
         return topk
 
     def count(self, q: Query) -> int:
@@ -246,8 +277,10 @@ class Executor:
             topk = (self.ix.docs.select("docid", "url")
                     .join(F.broadcast(topk), "docid")
                     .select("query_id", "docid", "url", "score"))
+        # ≤ k rows per query: the limit only turns the sort into one
+        # TakeOrderedAndProject
         return topk.orderBy("query_id", F.col("score").desc(),
-                            F.col("docid").asc())
+                            F.col("docid").asc()).limit(k * len(items))
 
     # ---- planning: Query -> DataFrame(docid, score) ------------------------
     def _plan(self, q: Query, scored: bool) -> DataFrame:
@@ -346,15 +379,13 @@ class Executor:
     def _rewrite_common_terms(self, q: CommonTerms) -> Query:
         """Split the analyzed terms by df at cutoff_frequency and rewrite
         to the equivalent bool (CommonTermsQueryBuilder / Lucene
-        CommonTermsQuery). The df lookup is a driver-side collect bounded
-        by the query's term count — the same per-query stats round-trip
-        the WAND path already pays, never a corpus scan."""
+        CommonTermsQuery). The df values come from the reader's cached
+        stats_for lookup — never a corpus scan."""
         terms = [t for t, _ in analyze(q.text, q.analyzer or
                                        self.ix.analyzer)]
         if not terms:
             return MatchNone()
-        dfs = {r["term"]: r["df"]
-               for r in self.ix.stats_for(sorted(set(terms))).collect()}
+        dfs = {t: v[0] for t, v in self.ix.stats_for(terms).items()}
         cut = (q.cutoff_frequency * self.ix.n_docs
                if q.cutoff_frequency < 1.0 else q.cutoff_frequency)
         low = [t for t in terms if dfs.get(t, 0) <= cut]
@@ -613,8 +644,7 @@ class Executor:
         cnt = Counter({t: c for t, c in cnt.items() if c >= min_tf})
         if not cnt:
             return self._empty()
-        srows = self.ix.stats_for(sorted(cnt)).collect()
-        dfm = {r["term"]: r["df"] for r in srows}
+        dfm = {t: v[0] for t, v in self.ix.stats_for(list(cnt)).items()}
         ranked = sorted(
             ((t, c * bm25.idf(dfm.get(t, 0), self.ix.n_docs))
              for t, c in cnt.items()
@@ -637,18 +667,27 @@ class Executor:
     def _term_scores(self, terms: list[str], scored: bool) -> DataFrame:
         """(docid, term, score) for every posting of the given terms,
         scored by the executor's similarity (BM25 default; boolean /
-        LMDirichlet / LMJelinekMercer via the `similarity` setting)."""
-        p = self.ix.postings_for(
-                terms, with_positions=False,
-                time_window=self._twindow[-1] if self._twindow else None) \
-            .select("term", "docid", "tf", "dl_q")
-        s = self.ix.stats_for(terms)
-        j = p.join(F.broadcast(s.select("term", "df", "cf")), "term")
-        score = (self.sim.score_expr(
-                     F.col("tf"), F.col("dl_q"), self.ix.n_docs,
-                     self.ix.avgdl, int(self.ix.meta["total_tf"]))
-                 if scored else F.lit(0.0))
-        return j.select("docid", "term", score.alias("score"))
+        LMDirichlet / LMJelinekMercer via the `similarity` setting).
+        The per-term df/cf columns the similarity reads are literal-map
+        lookups of the reader's stats_for dict; filter context
+        (scored=False) needs no statistics."""
+        tw = self._twindow[-1] if self._twindow else None
+        if not scored:
+            return (self.ix.postings_for(terms, with_positions=False,
+                                         time_window=tw)
+                    .select("docid", "term", F.lit(0.0).alias("score")))
+        stats = self.ix.stats_for(terms)
+        p = self.ix.postings_for(sorted(stats), with_positions=False,
+                                 time_window=tw).select(
+            "docid", "term", "tf", "dl_q",
+            _term_lookup({t: v[0] for t, v in stats.items()})
+            .cast("long").alias("df"),
+            _term_lookup({t: v[1] for t, v in stats.items()})
+            .cast("long").alias("cf"))
+        score = self.sim.score_expr(
+            F.col("tf"), F.col("dl_q"), self.ix.n_docs,
+            self.ix.avgdl, int(self.ix.meta["total_tf"]))
+        return p.select("docid", "term", score.alias("score"))
 
     def _tfn_sim(self, tf: Column, dl_q: Column) -> Column:
         """BM25 tf-normalization with the executor similarity's k1/b —
@@ -708,9 +747,8 @@ class Executor:
 
         Plan shape: ONE postings scan over the union of member terms, one
         groupBy(docid) with a conditional-sum column per position group; the
-        blended idf per group is a driver-side literal from the bounded
-        per-query stats lookup (same round-trip the WAND/common-terms paths
-        pay — never a corpus scan)."""
+        blended idf per group is a driver-side literal from the reader's
+        cached stats_for lookup — never a corpus scan."""
         import math
         from collections import Counter
 
@@ -724,8 +762,7 @@ class Executor:
         groups = Counter(tuple(sorted(g)) for g in bypos.values())
         n_pos = sum(groups.values())
         all_terms = sorted({t for g in groups for t in g})
-        dfs = {r["term"]: r["df"]
-               for r in self.ix.stats_for(all_terms).collect()}
+        dfs = {t: v[0] for t, v in self.ix.stats_for(all_terms).items()}
 
         def idf(df: int) -> float:
             return math.log1p((self.ix.n_docs - df + 0.5) / (df + 0.5))
@@ -908,21 +945,12 @@ class Executor:
         if not scored:
             return joined.select("docid", F.lit(0.0).alias("score"))
         self._require_bm25("phrase/span pseudo-term")
-        uniq = sorted(set(terms))
-        sum_idf = (self.ix.stats_for(uniq)
-                   .withColumn("idf", _idf_col(self.ix.n_docs)))
         from collections import Counter
         cnt = Counter(terms)
-        sum_idf = sum_idf.select(
-            F.sum(F.col("idf") *
-                  F.element_at(
-                      F.create_map(*[x for t2, c in cnt.items()
-                                     for x in (F.lit(t2), F.lit(float(c)))]),
-                      F.col("term"))).alias("sum_idf"))
-        score = (F.col("sum_idf") *
-                 self._tfn_sim(F.col("pf"), F.col("dl_q")))
-        return (joined.crossJoin(F.broadcast(sum_idf))
-                .select("docid", score.alias("score")))
+        sum_idf = _sum_idf(self.ix.n_docs, self.ix.stats_for(list(cnt)),
+                           cnt)
+        score = sum_idf * self._tfn_sim(F.col("pf"), F.col("dl_q"))
+        return joined.select("docid", score.alias("score"))
 
     @staticmethod
     def _fuzz_of(term: str, spec) -> int:

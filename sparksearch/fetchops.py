@@ -490,14 +490,15 @@ def _explain_terms(ex, weights: dict, docids: list) -> DataFrame:
     `weights` maps term → clause weight (duplicate-occurrence count for
     match)."""
     from sparksearch import bm25
+    from sparksearch.exec import _term_lookup
     ix = ex.ix
     cnt = weights
-    uniq = sorted(cnt)
     ids = [int(d) for d in docids]
-    p = (ix.postings_for(uniq, with_positions=False)
+    stats = ix.stats_for(list(cnt))
+    df = _term_lookup({t: v[0] for t, v in stats.items()}).cast("long")
+    p = (ix.postings_for(sorted(stats), with_positions=False)
          .filter(F.col("docid").isin(ids))
-         .select("docid", "term", "tf", "dl_q"))
-    s = ix.stats_for(uniq).select("term", "df")
+         .select("docid", "term", "tf", "dl_q", df.alias("df")))
     w = F.create_map(*[x for t, c in cnt.items()
                        for x in (F.lit(t), F.lit(float(c)))])
     idf = F.log(F.lit(1.0) + (F.lit(float(ix.n_docs)) - F.col("df") + 0.5)
@@ -505,8 +506,7 @@ def _explain_terms(ex, weights: dict, docids: list) -> DataFrame:
     tfn = (F.lit(bm25.K1 + 1.0) * F.col("tf")
            / (F.col("tf") + F.lit(bm25.K1)
               * (1.0 - bm25.B + bm25.B * F.col("dl_q") / F.lit(ix.avgdl))))
-    return (p.join(F.broadcast(s), "term")
-            .select("docid", "term",
+    return (p.select("docid", "term",
                     F.col("tf").cast("long").alias("tf"),
                     F.col("df").cast("long").alias("df"),
                     F.round(idf, 6).alias("idf"),
@@ -525,7 +525,7 @@ def _explain_phrase(ex, q, docids: list, weight: float = 1.0) -> DataFrame:
     from collections import Counter
 
     from sparksearch.analysis import analyze
-    from sparksearch.exec import _idf_col
+    from sparksearch.exec import _sum_idf
     ix = ex.ix
     ptoks = analyze(q.text, q.analyzer or ix.search_analyzer)
     terms = [t for t, _ in ptoks]
@@ -544,15 +544,10 @@ def _explain_phrase(ex, q, docids: list, weight: float = 1.0) -> DataFrame:
               else ex._phrase_freq_exact(terms)) \
         .filter(F.col("docid").isin(ids))
     cnt = Counter(terms)
-    wmap = F.create_map(*[x for t, c in cnt.items()
-                          for x in (F.lit(t), F.lit(float(c)))])
-    sum_idf = (ix.stats_for(sorted(cnt))
-               .withColumn("idf", _idf_col(ix.n_docs))
-               .select(F.sum(F.col("idf")
-                             * F.element_at(wmap, F.col("term")))
-                       .alias("sum_idf")))
+    sum_idf = _sum_idf(ix.n_docs, ix.stats_for(list(cnt)), cnt) \
+        .alias("sum_idf")
     tfn = ex._tfn_sim(F.col("pf"), F.col("dl_q"))
-    return (joined.crossJoin(F.broadcast(sum_idf))
+    return (joined.withColumn("sum_idf", sum_idf)
             .select("docid",
                     F.lit(q.text).alias("term"),
                     F.col("pf").cast("double").alias("tf"),

@@ -9,7 +9,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["IndexReader", "index_stats", "set_alias", "resolve_alias",
-           "open_index", "pit_reader"]
+           "open_index", "pit_reader", "IMPACT_COLUMNS"]
+
+#: term-level impact pair in the stats table: the block-max WAND bound
+#: needs both (wand.wand_topk)
+IMPACT_COLUMNS = ("max_tf", "min_dlq")
 
 
 class IndexReader:
@@ -17,6 +21,12 @@ class IndexReader:
 
     DataFrames are lazy; term lookups prune by `bucket` directory partition
     + parquet row-group min/max on the sorted `term` column.
+
+    A reader is pinned to one meta.json commit, so each table is read (its
+    files listed and its schema inferred, one Spark job) once per reader,
+    and every later access derives from that relation. Term statistics
+    are cached the same way (`stats_for`). `reload()` or `pit_reader`
+    start a fresh reader with fresh caches.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -69,6 +79,12 @@ class IndexReader:
         #: doc-values sidecars (with_docvalues): (frame, join key) pairs
         #: left-joined into the docs scan
         self._sidecars: list = []
+        #: table name → relation read once for this commit; shared with
+        #: the with_* copies, which read the same commit
+        self._relations: dict[str, DataFrame] = {}
+        #: term → (df, cf, max_tf, min_dlq), or None for a term the index
+        #: does not hold; filled by stats_for
+        self._term_stats: dict[str, tuple | None] = {}
 
     def reload(self) -> "IndexReader":
         """Re-read meta.json (after add_generation / merge commits)."""
@@ -102,18 +118,29 @@ class IndexReader:
                     self._covered = False
         return self._covered
 
+    def _relation(self, name: str, *paths: str,
+                  base: str | None = None) -> DataFrame:
+        """The parquet relation over `paths`, read once per reader."""
+        df = self._relations.get(name)
+        if df is None:
+            reader = self.spark.read
+            if base is not None:
+                reader = reader.option("basePath", base)
+            df = self._relations[name] = reader.parquet(*paths)
+        return df
+
     def _gen_union(self, root: str) -> DataFrame:
         base = f"{self.index_dir}/{root}"
-        df = self.spark.read.option("basePath", base).parquet(
-            *[f"{base}/gen={g}" for g in self.generations])
-        return df
+        return self._relation(
+            root, *[f"{base}/gen={g}" for g in self.generations], base=base)
 
     @property
     def deleted(self) -> DataFrame | None:
         """(docid) tombstone frame, or None when the index has no deletes."""
         if not self.delete_files:
             return None
-        return self.spark.read.parquet(
+        return self._relation(
+            "deletes",
             *[f"{self.index_dir}/{p}" for p in self.delete_files]) \
             .select("docid")
 
@@ -206,7 +233,7 @@ class IndexReader:
 
     @property
     def stats(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.index_dir}/{self.stats_path}")
+        return self._relation("stats", f"{self.index_dir}/{self.stats_path}")
 
     def bucket_of(self, term: str) -> int:
         """Driver-side bucket id for a term == pmod(xxhash64(term), B).
@@ -256,10 +283,27 @@ class IndexReader:
         from sparksearch.xxhash import spark_bucket
         return sorted({spark_bucket(t, self.n_buckets) for t in terms})
 
-    def stats_for(self, terms: list[str]) -> DataFrame:
-        if not terms:
-            return self.stats.limit(0)
-        return self.stats.filter(F.col("term").isin(sorted(set(terms))))
+    def stats_for(self, terms: list[str]) -> dict[str, tuple]:
+        """{term: (df, cf, max_tf, min_dlq)} for the given terms the index
+        holds; terms it does not hold are left out. One bounded collect
+        for the terms this reader has not looked up before, none when
+        all were. max_tf/min_dlq are None on an index whose stats table
+        predates the impact columns.
+
+        Every scoring path reads term statistics through this one method,
+        so a reader view may override it (multisearch._DfsReader)."""
+        want = sorted(set(terms) - self._term_stats.keys())
+        if want:
+            s = self.stats
+            impact = [F.col(c) if c in s.columns else F.lit(None)
+                      for c in IMPACT_COLUMNS]
+            got = {r[0]: tuple(r[1:]) for r in
+                   s.filter(F.col("term").isin(want))
+                    .select("term", "df", "cf", *impact).collect()}
+            for t in want:
+                self._term_stats[t] = got.get(t)
+        return {t: v for t in set(terms)
+                if (v := self._term_stats[t]) is not None}
 
 
 def pit_reader(spark: SparkSession, pit: dict) -> "IndexReader":

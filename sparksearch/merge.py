@@ -108,8 +108,8 @@ def add_generation(spark: SparkSession, index_dir: str, new_pages: DataFrame,
         if "max_tf" not in old.columns:
             # pre-impact-stats index: old generations' (max_tf, min_dlq)
             # are unknown, and max(delta) alone would UNDER-estimate the
-            # bound (unsound pruning) — drop the columns; wand_topk falls
-            # back to the per-query gmax job until a full rebuild
+            # bound (unsound pruning) — drop the columns; search plans
+            # such an index instead of running WAND until a full rebuild
             delta = delta.drop("max_tf", "min_dlq")
             merged = (old.unionByName(delta)
                       .groupBy("term")

@@ -79,8 +79,9 @@ def msearch_indices(executors: dict, q, k: int = 10,
 
 class _DfsReader:
     """IndexReader view scoring with AGGREGATED statistics: global
-    n_docs/avgdl/total_tf and summed per-term df/cf replace the index's
-    own, everything else delegates to the wrapped reader. This is the
+    n_docs/avgdl/total_tf and the per-term stats summed across indices
+    (df, cf; max of max_tf, min of min_dlq) replace the index's own,
+    everything else delegates to the wrapped reader. This is the
     AggregatedDfs the coordinator re-sends with the query phase
     (sv/action/search/DfsQueryPhase.java)."""
 
@@ -97,10 +98,16 @@ class _DfsReader:
         return getattr(object.__getattribute__(self, "_ix"), name)
 
     def stats_for(self, terms):
-        rows = [(t, int(self._stats[t][0]), int(self._stats[t][1]))
-                for t in sorted(set(terms)) if t in self._stats]
-        return self._ix.spark.createDataFrame(
-            rows, "term string, df long, cf long")
+        return {t: self._stats[t] for t in set(terms) if t in self._stats}
+
+
+def _sum_stats(a: tuple, b: tuple) -> tuple:
+    """Two indices' (df, cf, max_tf, min_dlq) for one term, combined; an
+    impact value either side lacks (None) stays unknown."""
+    known = a[2] is not None and b[2] is not None
+    return (a[0] + b[0], a[1] + b[1],
+            max(a[2], b[2]) if known else None,
+            min(a[3], b[3]) if known else None)
 
 
 def dfs_msearch_indices(executors: dict, q, k: int = 10,
@@ -126,10 +133,8 @@ def dfs_msearch_indices(executors: dict, q, k: int = 10,
     for name, ex in sorted(chosen.items()):
         terms = sorted({t for t, _ in
                         analyze(q.text, q.analyzer or ex.ix.search_analyzer)})
-        for r in ex.ix.stats_for(terms).select("term", "df", "cf").collect():
-            s = stats.setdefault(r["term"], [0, 0])
-            s[0] += int(r["df"])
-            s[1] += int(r["cf"])
+        for t, v in ex.ix.stats_for(terms).items():
+            stats[t] = v if t not in stats else _sum_stats(stats[t], v)
         n_total += ex.ix.n_docs
         sum_dl += ex.ix.avgdl * ex.ix.n_docs
         ttf += int(ex.ix.meta.get("total_tf", 0))

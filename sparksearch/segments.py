@@ -346,12 +346,17 @@ class SegmentsReader:
         self.generations: list[int] = self.meta["generations"]
         #: meta (docs/postings) generations represented by these segments
         self.covers: list[int] = self.meta.get("covers", self.generations)
+        self._blocks: DataFrame | None = None
 
     @property
     def blocks(self) -> DataFrame:
-        base = f"{self.index_dir}/segments"
-        return self.spark.read.option("basePath", base).parquet(
-            *[f"{base}/gen={g}" for g in self.generations])
+        """Block relation of the manifest's generations, read once per
+        reader (the manifest this reader loaded never changes)."""
+        if self._blocks is None:
+            base = f"{self.index_dir}/segments"
+            self._blocks = self.spark.read.option("basePath", base).parquet(
+                *[f"{base}/gen={g}" for g in self.generations])
+        return self._blocks
 
     def blocks_for(self, terms: list[str], buckets: list[int]) -> DataFrame:
         uniq = sorted(set(terms))

@@ -27,13 +27,16 @@ Scope: configurable similarity applies to the term-scored paths (match /
 bool / msearch — everything through ``Executor._term_scores``). Positional
 and expanded paths (phrase, spans, fuzzy, synonym-blended, MLT) raise
 NotImplementedError under a non-BM25 similarity rather than silently
-scoring BM25; the block-max WAND path requires default-parameter BM25
-(its stored impact bounds are BM25 upper bounds) and falls back to the
-plan path otherwise.
+scoring BM25. The block-max WAND path covers any BM25 (k1, b): its stored
+impact pairs are raw (max_tf, min_dlq) statistics and the bounds are
+re-derived at query time, which is exact because BM25 here rejects
+k1 < 0 and b outside [0, 1]. Only non-BM25 similarities fall back to the
+plan path.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column
@@ -67,8 +70,19 @@ class Similarity:
 
 @dataclass(frozen=True)
 class BM25Similarity(Similarity):
+    """BM25(k1, b). Like Lucene's BM25Similarity, rejects k1 < 0 and b
+    outside [0, 1]: WAND's block bounds rely on tf/(tf+k1·(1-b+b·dl/avgdl))
+    rising in tf and falling in dl, which only holds in that range."""
     k1: float = bm25.K1
     b: float = bm25.B
+
+    def __post_init__(self):
+        if not (math.isfinite(self.k1) and self.k1 >= 0):
+            raise ValueError(f"illegal k1 value: {self.k1}, must be a "
+                             "non-negative finite value")
+        if not 0 <= self.b <= 1:
+            raise ValueError(f"illegal b value: {self.b}, must be between "
+                             "0 and 1")
 
     def score_expr(self, tf, dl_q, n_docs, avgdl, total_tf):
         df = F.col("df").cast("double")

@@ -82,7 +82,9 @@ def wand_topk(ix, q: Match, k: int = 10,
     """Exact BM25 top-k for a match query via block-max pruning.
 
     Returns DataFrame(docid, score), score desc / docid asc, ≤ k rows.
-    `ix` is an IndexReader with packed segments built.
+    `ix` is an IndexReader with packed segments built and the term-level
+    (max_tf, min_dlq) impact columns in its stats table; ValueError
+    otherwise (Executor.search mode="auto" plans such an index instead).
 
     ``k1``/``b`` tune the BM25 parameters (default: the reference
     defaults 1.2/0.75). The stored impact pairs are raw per-block
@@ -93,6 +95,12 @@ def wand_topk(ix, q: Match, k: int = 10,
     """
     k1 = bm25.K1 if k1 is None else float(k1)
     b = bm25.B if b is None else float(b)
+    from sparksearch.index import IMPACT_COLUMNS
+    missing = [c for c in IMPACT_COLUMNS if c not in ix.stats.columns]
+    if missing:
+        raise ValueError(
+            f"wand_topk needs the stats columns {missing}; this index's "
+            "stats table predates them — rebuild it, or use the plan path")
     toks = analyze(q.text, q.analyzer or ix.search_analyzer)
     terms = [t for t, _ in toks]
     if len({p for _, p in toks}) != len(toks):
@@ -111,10 +119,7 @@ def wand_topk(ix, q: Match, k: int = 10,
         msm = calculate_min_should_match(
             len(terms), q.minimum_should_match, has_required=False)
 
-    # buckets are pure-Python xxhash64 (no job); blocks and their window
-    # don't need stats, so the tiny stats collect and the phase-A seed
-    # collect run as CONCURRENT jobs — the driver-side seed scoring below
-    # waits on both
+    # buckets are pure-Python xxhash64 (no job)
     buckets = ix._buckets_of(uniq)
     blocks = ix.segments.blocks_for(uniq, buckets)
     # block upper bound from the stored (max_tf, min_dlq) impact pair and the
@@ -145,14 +150,10 @@ def wand_topk(ix, q: Match, k: int = 10,
                .filter(F.col("_rn") <= j)
                .select("term", "docids", "tfs", "norms"))
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_stats = pool.submit(lambda: ix.stats_for(uniq).collect())
-        fut_seed = pool.submit(seed_df.collect)
-        srows = fut_stats.result()
-        seed_rows = fut_seed.result()
+    stats = ix.stats_for(uniq)
+    seed_rows = seed_df.collect()
 
-    idf = {r["term"]: bm25.idf(r["df"], ix.n_docs) for r in srows}
+    idf = {t: bm25.idf(v[0], ix.n_docs) for t, v in stats.items()}
     # (k1+1) folded into the per-term weight: decode emits plain
     # tf/(tf+k1·norm), so score = w·idf·(k1+1)·tfn = LegacyBM25Similarity
     widf = {t: cnt[t] * idf.get(t, 0.0) * (k1 + 1.0) for t in uniq}
@@ -164,16 +165,8 @@ def wand_topk(ix, q: Match, k: int = 10,
     # impact pair in the stats table — zero extra jobs.
     # tfn_ub(max over blocks max_tf, min over blocks min_dlq) ≥
     # max over blocks tfn_ub(block) ≥ any doc's tfn, so pruning stays
-    # exact (marginally looser than the per-block max, which cost a
-    # groupBy-collect job per query on legacy indexes without the columns).
-    if srows and "max_tf" in srows[0].asDict() \
-            and all(r["max_tf"] is not None for r in srows):
-        gm = {r["term"]: _tfn_bound(float(r["max_tf"]), float(r["min_dlq"]))
-              for r in srows}
-    else:
-        gm = {r["term"]: r["gmax"] for r in
-              blocks.groupBy("term")
-                    .agg(F.max("_tfn_ub").alias("gmax")).collect()}
+    # exact (marginally looser than the per-block max).
+    gm = {t: _tfn_bound(float(v[2]), float(v[3])) for t, v in stats.items()}
     sum_all = sum(widf[t] * gm.get(t, 0.0) for t in present)
 
     dec = _decode_score(widf, ix.avgdl, k1, b)

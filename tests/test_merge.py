@@ -198,7 +198,9 @@ def test_point_in_time_reader_snapshot(spark, tmp_path_factory):
     opened before a new generation commits keeps serving the old snapshot
     — meta.json is loaded at init and generation dirs are immutable — while
     a reload() picks up the commit. The batch equivalent of searching over
-    a point-in-time Lucene reader while refreshes land."""
+    a point-in-time Lucene reader while refreshes land. The reader's
+    cached relations and term stats are part of its snapshot: they never
+    go stale, and reload() starts from fresh ones."""
     from sparksearch.build import build_index
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
@@ -215,22 +217,30 @@ def test_point_in_time_reader_snapshot(spark, tmp_path_factory):
     pit = IndexReader(spark, out)          # point-in-time: gen 0 only
     n0 = pit.docs.count()
     q = Match("text", "join")
-    before = {r["docid"] for r in
-              Executor(pit).search(q, k=10, fetch=False).collect()}
+    df0 = pit.stats_for(["join"])["join"][0]
+
+    def top(ix):
+        return [(r["docid"], r["score"]) for r in
+                Executor(ix).search(q, k=10, fetch=False).collect()]
+
+    before = top(pit)
 
     add_generation(spark, out, half2, partitions=4, with_segments=False)
 
     # the PIT reader still sees exactly the old snapshot
     assert pit.generations == [0]
+    assert pit.n_docs == n0
     assert pit.docs.count() == n0
-    after_pit = {r["docid"] for r in
-                 Executor(pit).search(q, k=10, fetch=False).collect()}
-    assert after_pit == before
+    assert pit.stats_for(["join"])["join"][0] == df0
+    assert top(pit) == before
 
     # a fresh reader sees the committed generation
     live = pit.reload()
     assert live.generations == [0, 1]
-    assert live.docs.count() > n0
+    assert live.n_docs > n0
+    assert live.docs.count() == live.n_docs
+    assert live.stats_for(["join"])["join"][0] > df0
+    assert any(d >= n0 for d, _ in top(live))
 
 
 def test_alias_blue_green_swap(spark, tmp_path_factory):

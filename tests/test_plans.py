@@ -83,11 +83,79 @@ def test_docvalue_filter_pushdown(engine):
     assert "lang" in plan.split("PushedFilters", 1)[1][:200]
 
 
-def test_stats_broadcast_in_term_scores(engine):
+def test_term_scores_read_no_stats_table(engine):
+    """Term statistics come from the reader's cached stats_for dict as
+    literal maps: the scoring plan scans only postings and joins
+    nothing."""
+    import re
+    from sparksearch.queries import Match
+    ix, ex = engine
+    plan = _plan_str(ex._plan(Match("text", "hash join"), scored=True))
+    scans = re.findall(r"FileScan parquet[^\n]*", plan)
+    assert scans and all("postings" in s for s in scans), plan
+    assert ix.stats_path not in plan, plan
+    assert "Join" not in plan, plan
+
+
+def _job_count(spark, action) -> int:
+    """Spark jobs run by `action`, counted through a job group."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count gate")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _search_jobs(spark, ex, q, mode) -> tuple[int, int]:
+    """(jobs while planning, jobs in total) of one search on a warm
+    reader: the same query ran once before, so relations and term stats
+    are cached."""
+    ex.search(q, k=10, mode=mode).collect()
+    out = {}
+    planning = _job_count(
+        spark, lambda: out.setdefault("df", ex.search(q, k=10, mode=mode)))
+    return planning, planning + _job_count(spark, out["df"].collect)
+
+
+def test_plan_match_job_count(engine, spark):
+    """Job-count gate, free of host noise: a warm plan-path match plans
+    with no Spark job and runs in at most 3."""
     from sparksearch.queries import Match
     _, ex = engine
-    plan = _plan_str(ex._plan(Match("text", "hash join"), scored=True))
-    assert "BroadcastHashJoin" in plan  # stats (idf) side is broadcast
+    planning, total = _search_jobs(spark, ex, Match("text", "hash join"),
+                                   "plan")
+    assert planning == 0
+    assert total <= 3
+
+
+def test_wand_match_job_count(engine, spark):
+    """A warm WAND match runs at most 5 jobs, its seed included."""
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.queries import Match
+    from sparksearch.segments import build_segments
+    ix, _ = engine
+    build_segments(spark, ix.index_dir, n_chunks=1, partitions=4)
+    ex = Executor(IndexReader(spark, ix.index_dir, use_segments=True))
+    _, total = _search_jobs(spark, ex, Match("text", "hash join"), "wand")
+    assert total <= 5
+
+
+def test_run_search_bool_filter_job_count(engine, spark):
+    """A warm run_search of a bool match + term filter body, total hits
+    included, runs at most 8 jobs."""
+    from sparksearch.api import run_search
+    _, ex = engine
+    body = {"query": {"bool": {"must": [{"match": {"text": "hash join"}}],
+                               "filter": [{"term": {"lang": "en"}}]}},
+            "size": 10}
+    run_search(ex, body)
+    assert _job_count(spark, lambda: run_search(ex, body)) <= 8
 
 
 def test_column_pruning_docs(engine):

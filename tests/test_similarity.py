@@ -33,6 +33,24 @@ def test_from_config_parsing():
     assert not BooleanSimilarity().is_default_bm25
 
 
+@pytest.mark.parametrize("k1,b", [(-0.1, 0.75), (float("inf"), 0.75),
+                                  (float("nan"), 0.75), (1.2, -0.01),
+                                  (1.2, 1.01), (1.2, float("nan"))])
+def test_bm25_rejects_out_of_range_parameters(k1, b):
+    """WAND's block bounds are exact only for k1 ≥ 0 and 0 ≤ b ≤ 1, so
+    BM25 rejects anything else, from the class and from a config."""
+    with pytest.raises(ValueError):
+        BM25Similarity(k1, b)
+    with pytest.raises(ValueError):
+        from_config({"type": "BM25", "k1": k1, "b": b})
+
+
+def test_bm25_accepts_range_edges():
+    assert BM25Similarity(0.0, 0.0).to_config() == \
+        {"type": "BM25", "k1": 0.0, "b": 0.0}
+    assert BM25Similarity(2.0, 1.0).b == 1.0
+
+
 def test_index_setting_persists_and_executor_uses_it(spark, tmp_path):
     """build_index(similarity=...) → meta.json → Executor default."""
     from sparksearch.build import build_index
@@ -72,7 +90,7 @@ def test_lmd_score_matches_formula(spark, index_sf0001):
     ix = index_sf0001
     post = (ix.postings_for(["join"], with_positions=False)
             .filter(F.col("docid") == row.docid).collect()[0])
-    cf = ix.stats_for(["join"]).collect()[0]["cf"]
+    cf = ix.stats_for(["join"])["join"][1]
     T = ix.meta["total_tf"]
     p = (cf + 1.0) / (T + 1.0)
     mu = 2000.0
