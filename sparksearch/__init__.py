@@ -13,7 +13,7 @@ Modules:
   oracle    — pure-NumPy single-node reference engine for rank-identity tests
   corpus    — deterministic Common-Crawl-style pages corpus generator
   build     — distributed index build (tokens → stats → postings → segments)
-  segments  — delta+varint posting codec with per-block max metadata
+  segments  — Parquet-native 128-doc posting blocks with block-max metadata
   query     — query AST + DataFrame execution (match / bool / phrase → top-k)
   textops   — training-data pipeline ops (dedup, lang-id, quality, fingerprint)
   similarity— embedding similarity search (brute-force + LSH-bucketed ANN)

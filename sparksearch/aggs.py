@@ -222,7 +222,7 @@ def significance_score(fg: Column, fg_n: float, bg: Column, bg_n: float,
       N11=fg  N01=fg_n−fg  N10=bg−fg  N00=bg_n−bg−(fg_n−fg)
       N1_=bg  N0_=bg_n−bg  N_1=fg_n   N_0=bg_n−fg_n  N=bg_n
 
-    - ``jlh``: (fg%−bg%)·(fg%/bg%)
+    - ``jlh``: (fg%−bg%)·(fg%/bg%), 0 when fg% ≤ bg%
     - ``chi_square``: N·(N11·N00−N01·N10)² / (N_1·N1_·N0_·N_0);
       −∞ when the term is rarer in the subset (include_negatives=false)
     - ``mutual_information``: Σ Nxy/N·log₂(N·Nxy/(Nx_·N_y)) with
@@ -243,8 +243,10 @@ def significance_score(fg: Column, fg_n: float, bg: Column, bg_n: float,
     n = F.lit(float(bg_n))
     neg = (n11 / n_1) < (n10 / n_0)
     if heuristic == "jlh":
+        # JLHScore.getScore: 0 unless the term is commoner in the subset
         fgp, bgp = f / float(fg_n), b / float(bg_n)
-        return (fgp - bgp) * (fgp / bgp)
+        return F.when(fgp <= bgp, F.lit(0.0)) \
+            .otherwise((fgp - bgp) * (fgp / bgp))
     if heuristic == "chi_square":
         s = (n * F.pow(n11 * n00 - n01 * n10, F.lit(2.0))
              / (n_1 * n1_ * n0_ * n_0))

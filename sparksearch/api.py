@@ -240,7 +240,8 @@ def _sorted_scan_cond(ex, body, q, sort, needs_score, script_sorts,
     the index_sort field (docid tie-break only), nothing needs a score,
     and the query is pure filter context over doc values, return the
     filter Column — the hits then come from `sortedscan.sorted_topk`'s
-    manifest-pruned file prefix instead of a full docs scan."""
+    manifest-pruned file prefix instead of a full docs scan. A primary
+    sort with a non-default `missing` policy takes the full plan."""
     isort = ex.ix.meta.get("index_sort")
     if (not isort or is_vec or needs_score or script_sorts
             or ex.ix._runtime or not body.get("sort")):
@@ -249,8 +250,10 @@ def _sorted_scan_cond(ex, body, q, sort, needs_score, script_sorts,
             "search_after", "collapse", "rescore", "terminate_after",
             "post_filter", "highlight", "min_score", "script_fields")):
         return None
-    pf, rest = sort[0][0], sort[1:]
-    if pf != isort["field"]:
+    (pf, _asc, missing), rest = sort[0], sort[1:]
+    # the file prefix ranks by raw build order: a non-default missing
+    # policy would place null-valued docs elsewhere
+    if pf != isort["field"] or missing != "_last":
         return None
     if any(f not in ("_doc", "docid") or not asc
            for f, asc, _m in rest):

@@ -166,7 +166,9 @@ class Executor:
         # re-derived at query time (wand_topk docstring); non-BM25
         # similarities (LM/DFR/DFI/IB/boolean/scripted) use the plan path.
         # An index whose stats table predates the (max_tf, min_dlq)
-        # impact columns has no WAND bound: auto mode plans it.
+        # impact columns has no WAND bound, and segments in the retired
+        # varint block format do not count as covering: auto mode plans
+        # either on row postings.
         from sparksearch.index import IMPACT_COLUMNS
         from sparksearch.similarity import BM25Similarity
         use_wand = (mode in ("auto", "wand") and isinstance(q, Match)

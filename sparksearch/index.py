@@ -104,6 +104,8 @@ class IndexReader:
         yet (segments would silently omit those docs) or segments hold an
         uncommitted generation (phantom docs). postings_for and the WAND
         path fall back to row postings until merge.ensure_segments repairs.
+        Segments in the retired varint block format count as not covering
+        (search plans on row postings until they are rebuilt).
         Cached per reader instance — IndexReader.reload() picks up commits,
         matching the snapshot semantics of meta loaded at init."""
         if self._covered is None:
@@ -113,7 +115,8 @@ class IndexReader:
             else:
                 try:
                     self._covered = (set(self.segments.covers)
-                                     == set(self.generations))
+                                     == set(self.generations)
+                                     and not self.segments.legacy_format)
                 except Exception:
                     self._covered = False
         return self._covered

@@ -18,13 +18,13 @@ analogues here:
       stored avgdl-independent (max_tf, min_dlq) so WAND bounds stay sound.
 
   merge_segments(spark, dir)
-      The compaction pass: decode every live generation's blocks back to
-      row postings, re-encode them through the same salted
-      (term, salt)-keyed encoder into one consolidated generation, commit
-      segments_meta.json, and delete the old generation dirs. Blocks are
-      self-contained (absolute first docid per block), so merging never
-      rewrites docids; per-term block sets from disjoint docid ranges
-      simply interleave.
+      The compaction pass: unpack every live generation's blocks back to
+      row postings (segments.decode_blocks — each doc's position array
+      moves as it is), re-encode them through the same salted
+      (term, salt)-keyed Catalyst encoder into one consolidated generation,
+      commit segments_meta.json, and delete the old generation dirs.
+      Blocks hold absolute docids, so merging never rewrites docids;
+      per-term block sets from disjoint docid ranges simply interleave.
 
 should_merge() applies the segmentsPerTier-style trigger (default 10 live
 generations, MergePolicyConfig.java:203-236).
@@ -48,11 +48,10 @@ from sparksearch.build import (
 )
 from sparksearch.segments import (
     SegmentsReader,
-    _DECODED_SCHEMA,
-    _decode_blocks,
     _load_seg_meta,
     _write_seg_meta,
     build_segments,
+    decode_blocks,
 )
 
 __all__ = ["add_generation", "ensure_segments", "merge_segments",
@@ -208,12 +207,11 @@ def merge_segments(spark: SparkSession, index_dir: str,
     new_gen = max(old_gens) + 1
 
     reader = SegmentsReader(spark, index_dir)
+    reader.require_current("merge_segments")
     covers = list(reader.covers)  # meta gens represented — unchanged by merge
     with open(f"{index_dir}/meta.json") as f:
         n_buckets = json.load(f)["n_buckets"]
-    decoded = (reader.blocks
-               .select("term", "docids", "tfs", "norms", "positions")
-               .mapInPandas(_decode_blocks(True), schema=_DECODED_SCHEMA)
+    decoded = (decode_blocks(reader.blocks, with_positions=True)
                .withColumn("bucket",
                            F.pmod(F.xxhash64("term"), F.lit(n_buckets))))
     gen_meta = build_segments(spark, index_dir, gen=new_gen,

@@ -1,22 +1,32 @@
-"""Packed posting segments: delta+varint blocks with block-max metadata.
+"""Packed posting segments: Parquet-native 128-doc blocks with block-max
+metadata.
 
 The Spark analogue of Lucene's segment files (reference wiring:
 /root/reference/server/src/main/java/org/opensearch/index/codec/CodecService.java:37-69
 selects Lucene90PostingsFormat [Lucene 9.4, public]: 128-doc blocks,
-delta/varint compression, per-block impacts for block-max WAND;
+delta/FOR compression, per-block impacts for block-max WAND;
 /root/reference/server/src/main/java/org/opensearch/index/engine/InternalEngine.java:844-1116
 is the write path). Layout under <index_dir>/segments/:
 
   gen=G/chunk=J/bucket=B/part-*.parquet   one row per posting BLOCK:
       term, salt, block_id, n, first_docid, last_docid,
-      docids BINARY (first absolute + gap varints),
-      tfs BINARY (varints), norms BINARY (1 byte/doc, SmallFloat byte4),
-      positions BINARY (per-doc delta varints),
+      docids array<bigint> (absolute), tfs array<int>,
+      dlqs array<int> (the quantized doc length of each posting),
+      positions array<array<int>> (absolute, per doc),
       max_tf INT, min_dlq BIGINT (the block impact pair — like Lucene's
       (freq, norm) impacts, stored avgdl-independent so the bound stays
       sound when later generations shift global avgdl/N)
   gen=G/_manifest/chunk-J.json            per-chunk lineage + metrics
   segments_meta.json                      generations, params
+
+The block payload is plain Parquet arrays, so the engine itself encodes
+and decodes it: blocks are built by Catalyst (a row_number over each
+(term, salt) run numbers the blocks, a sorted collect_list packs them) and
+read back by one inline(arrays_zip(...)) generator (`decode_blocks`). No
+Python worker runs in this layer. Compression is Parquet's: v2 data pages
+with dictionary encoding off for docids and positions make those two
+columns DELTA_BINARY_PACKED (bit-packed gaps, the FOR analogue), and tfs /
+dlqs dictionary-encode (dlqs has at most 256 distinct values).
 
 Scale design:
   - the encode shuffle is keyed by (term, salt): head terms (Zipf — default
@@ -24,134 +34,103 @@ Scale design:
     (salt = docid * S / n_docs, S = ceil(df / salt_target)) so no single
     task ever materializes more than ~salt_target postings; dense docids
     make the ranges perfectly balanced, and range (not hash) salting keeps
-    each salted run contiguous so blocks stay globally docid-ordered.
+    each salted run contiguous so blocks stay globally docid-ordered. The
+    block numbering window and the packing aggregate both reuse that
+    partitioning, so the encode has one shuffle.
   - chunked writes (term-hash chunks, each with its own _SUCCESS +
     manifest) give mid-build resume at sub-index granularity — the batch
     analogue of the reference's per-shard translog checkpoints
     (sv/index/seqno/LocalCheckpointTracker.java:47-143).
-  - encode/decode are NumPy-vectorized inside applyInPandas/mapInPandas
-    (Arrow batches; no per-row Python).
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
+import shutil
 import time
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparksearch.codec import (
-    BLOCK_SIZE,
-    delta_decode_docids,
-    decode_positions,
-    varint_decode,
-    varint_encode_with_lengths,
-)
-from sparksearch.norms import DECODE_LUT, int_to_byte4_np
+__all__ = ["build_segments", "encode_blocks", "decode_blocks",
+           "SegmentsReader", "decoded_postings", "BLOCK_SIZE"]
 
-__all__ = ["build_segments", "SegmentsReader", "decoded_postings"]
+#: docs per posting block (Lucene90PostingsFormat block size).
+BLOCK_SIZE = 128
 
-_BLOCK_SCHEMA = T.StructType([
-    T.StructField("bucket", T.IntegerType(), False),
-    T.StructField("term", T.StringType(), False),
-    T.StructField("salt", T.IntegerType(), False),
-    T.StructField("block_id", T.IntegerType(), False),
-    T.StructField("n", T.IntegerType(), False),
-    T.StructField("first_docid", T.LongType(), False),
-    T.StructField("last_docid", T.LongType(), False),
-    T.StructField("docids", T.BinaryType(), False),
-    T.StructField("tfs", T.BinaryType(), False),
-    T.StructField("norms", T.BinaryType(), False),
-    T.StructField("positions", T.BinaryType(), False),
-    T.StructField("max_tf", T.IntegerType(), False),
-    T.StructField("min_dlq", T.LongType(), False),
-])
+#: Parquet writer settings for block files: v2 pages, and no dictionary on
+#: the two high-cardinality int columns, so they are DELTA_BINARY_PACKED
+#: (a dictionary of absolute docids is about 3x the size of their gaps)
+_WRITE_OPTIONS = {
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#docids.list.element": "false",
+    "parquet.enable.dictionary#positions.list.element.list.element": "false",
+}
 
 
-def _encode_group():
-    """applyInPandas encoder for one (bucket, term, salt) posting group.
+def encode_blocks(postings: DataFrame, n_docs: int,
+                  nsalt_map: dict[str, int], partitions: int) -> DataFrame:
+    """Row postings (bucket, term, docid, tf, positions, dl_q) → one row
+    per posting block of the segment layout, all in Catalyst.
 
-    Fully vectorized: ONE varint pass per payload over the whole group with
-    per-value byte lengths, then per-block byte-range slicing — no
-    per-block numpy calls (a group of 64k postings is ~10 numpy ops +
-    one slice comprehension over its ~500 blocks)."""
+    `nsalt_map` gives the salt count of each head term (others get 1);
+    salt s of a term holds the docids in [s·n_docs/S, (s+1)·n_docs/S)."""
+    if nsalt_map:
+        ns_col = F.coalesce(
+            F.element_at(
+                F.create_map(*[x for t, s in nsalt_map.items()
+                               for x in (F.lit(t), F.lit(s))]),
+                F.col("term")),
+            F.lit(1)).cast("long")
+    else:
+        ns_col = F.lit(1).cast("long")
+    salted = postings.withColumn(
+        "salt",
+        ((F.col("docid") * ns_col) / F.lit(max(1, n_docs))).cast("int"))
+    run = Window.partitionBy("term", "salt").orderBy("docid")
+    doc = F.struct("docid", "tf", F.col("dl_q").cast("int").alias("dl_q"),
+                   "positions")
+    packed = (salted
+              .repartition(partitions, "term", "salt")
+              .withColumn("block_id",
+                          ((F.row_number().over(run) - 1) / BLOCK_SIZE)
+                          .cast("int"))
+              .groupBy("bucket", "term", "salt", "block_id")
+              .agg(F.sort_array(F.collect_list(doc)).alias("d")))
+    return packed.select(
+        "bucket", "term", "salt", "block_id",
+        F.size("d").alias("n"),
+        F.col("d")[0]["docid"].alias("first_docid"),
+        F.element_at("d", -1)["docid"].alias("last_docid"),
+        F.col("d.docid").alias("docids"),
+        F.col("d.tf").alias("tfs"),
+        F.col("d.dl_q").alias("dlqs"),
+        F.col("d.positions").alias("positions"),
+        F.array_max("d.tf").alias("max_tf"),
+        F.array_min("d.dl_q").cast("long").alias("min_dlq"))
 
-    def enc(key, pdf):
-        bucket, term, salt = int(key[0]), key[1], int(key[2])
-        order = np.argsort(pdf["docid"].values, kind="stable")
-        docids = pdf["docid"].values[order].astype(np.int64)
-        tfs = pdf["tf"].values[order].astype(np.int64)
-        dl_q = pdf["dl_q"].values[order].astype(np.int64)
-        poss = pdf["positions"].values[order]
-        n = len(docids)
-        starts = np.arange(0, n, BLOCK_SIZE)
-        ends = np.minimum(starts + BLOCK_SIZE, n)
-        nb = len(starts)
 
-        norms_all = int_to_byte4_np(dl_q).astype(np.uint8).tobytes()
+def decode_blocks(blocks: DataFrame, with_positions: bool = True
+                  ) -> DataFrame:
+    """Block rows → row postings (term, docid, tf, positions, dl_q), one
+    row per posting, by one Catalyst generator. with_positions=False
+    leaves the positions column out of the scan and yields empty lists."""
+    cols = ["docids", "tfs", "dlqs"] + (["positions"] if with_positions
+                                        else [])
+    rows = blocks.select("term", F.inline(F.arrays_zip(*cols)))
+    return rows.select(
+        "term", F.col("docids").alias("docid"), F.col("tfs").alias("tf"),
+        F.col("positions") if with_positions
+        else F.array().cast("array<int>").alias("positions"),
+        F.col("dlqs").cast("long").alias("dl_q"))
 
-        # docid gaps with the first value of each block absolute
-        dd = np.empty(n, np.int64)
-        dd[0] = docids[0]
-        dd[1:] = np.diff(docids)
-        dd[starts] = docids[starts]
-        dbytes, dlen = varint_encode_with_lengths(dd)
-        doff = np.zeros(n + 1, np.int64)
-        np.cumsum(dlen, out=doff[1:])
 
-        tbytes, tlen = varint_encode_with_lengths(tfs)
-        toff = np.zeros(n + 1, np.int64)
-        np.cumsum(tlen, out=toff[1:])
-
-        # positions: flat concat, per-doc delta resets, one varint pass
-        flat = (np.concatenate([np.asarray(p, dtype=np.int64) for p in poss])
-                if n else np.zeros(0, np.int64))
-        csum_tf = np.cumsum(tfs) if n else np.zeros(0, np.int64)
-        doc_starts = np.zeros(n, np.int64)
-        doc_starts[1:] = csum_tf[:-1]
-        if len(flat):
-            pdlt = np.empty(len(flat), np.int64)
-            pdlt[0] = flat[0]
-            pdlt[1:] = np.diff(flat)
-            pdlt[doc_starts] = flat[doc_starts]
-            pbytes, plen = varint_encode_with_lengths(pdlt)
-            poffv = np.zeros(len(flat) + 1, np.int64)
-            np.cumsum(plen, out=poffv[1:])
-        else:
-            pbytes, poffv = b"", np.zeros(1, np.int64)
-        blk_pos_lo = poffv[doc_starts[starts]] if n else poffv[:0]
-        blk_pos_hi = poffv[csum_tf[ends - 1]] if n else poffv[:0]
-
-        max_tf = np.maximum.reduceat(tfs, starts) if n else tfs
-        min_dlq = np.minimum.reduceat(dl_q, starts) if n else dl_q
-
-        rows = {
-            "bucket": np.full(nb, bucket, np.int32),
-            "term": [term] * nb,
-            "salt": np.full(nb, salt, np.int32),
-            "block_id": np.arange(nb, dtype=np.int32),
-            "n": (ends - starts).astype(np.int32),
-            "first_docid": docids[starts],
-            "last_docid": docids[ends - 1],
-            "docids": [dbytes[doff[s]:doff[e]]
-                       for s, e in zip(starts, ends)],
-            "tfs": [tbytes[toff[s]:toff[e]]
-                    for s, e in zip(starts, ends)],
-            "norms": [norms_all[s:e] for s, e in zip(starts, ends)],
-            "positions": [pbytes[lo:hi]
-                          for lo, hi in zip(blk_pos_lo, blk_pos_hi)],
-            "max_tf": max_tf.astype(np.int32),
-            "min_dlq": min_dlq,
-        }
-        return pd.DataFrame(rows)
-
-    return enc
+def _parquet_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(path)
+               for f in files if f.endswith(".parquet"))
 
 
 def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
@@ -164,8 +143,9 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
 
     Chunk c holds terms with pmod(xxhash64(term), n_chunks) == c; each chunk
     is one atomic write with its own manifest, so a killed build resumes at
-    the first incomplete chunk (`resume=True`). `postings_df` overrides the
-    input (used by the merge pass to feed decoded multi-gen postings).
+    the first incomplete chunk (`resume=True`); without `resume` the
+    generation's directory is rebuilt from scratch. `postings_df` overrides
+    the input (used by the merge pass to feed decoded multi-gen postings).
 
     `covers` lists the meta (docs/postings) generations this segment
     generation represents — defaults to [gen]. segments_meta.json tracks the
@@ -178,6 +158,8 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
         meta = json.load(f)
     n_docs = int(meta["n_docs"])
     gen_dir = f"{index_dir}/segments/gen={gen}"
+    if not resume:
+        shutil.rmtree(gen_dir, ignore_errors=True)
     os.makedirs(f"{gen_dir}/_manifest", exist_ok=True)
     p = partitions or spark.sparkContext.defaultParallelism
 
@@ -188,13 +170,13 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
     head = (stats.filter(F.col("df") > salt_target)
             .select("term", F.ceil(F.col("df") / salt_target)
                     .cast("int").alias("nsalts")))
-    head_rows = head.collect()
-    nsalt_map = {r["term"]: r["nsalts"] for r in head_rows}
+    nsalt_map = {r["term"]: r["nsalts"] for r in head.collect()}
 
     if postings_df is not None:
         postings = postings_df
     else:
         postings = spark.read.parquet(f"{index_dir}/postings/gen={gen}")
+
     def build_chunk(c: int) -> dict:
         chunk_dir = f"{gen_dir}/chunk={c}"
         mpath = f"{gen_dir}/_manifest/chunk-{c}.json"
@@ -205,23 +187,7 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
         t0 = time.time()
         part = postings.filter(
             F.pmod(F.xxhash64("term"), F.lit(n_chunks)) == c)
-        if nsalt_map:
-            ns_col = F.coalesce(
-                F.element_at(
-                    F.create_map(*[x for t, s in nsalt_map.items()
-                                   for x in (F.lit(t), F.lit(s))]),
-                    F.col("term")),
-                F.lit(1)).cast("long")
-        else:
-            ns_col = F.lit(1).cast("long")
-        salted = part.withColumn(
-            "salt",
-            ((F.col("docid") * ns_col) / F.lit(max(1, n_docs)))
-            .cast("int"))
-        blocks = (salted
-                  .repartition(p, "term", "salt")
-                  .groupBy("bucket", "term", "salt")
-                  .applyInPandas(_encode_group(), schema=_BLOCK_SCHEMA))
+        blocks = encode_blocks(part, n_docs, nsalt_map, p)
         # lineage + metrics ride the write job via Observation — no
         # re-read-and-aggregate job per chunk (count_distinct isn't
         # supported in observe, so `terms` counts per-(term,salt) encoder
@@ -232,18 +198,15 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
         observed = blocks.observe(
             obs, F.count(F.lit(1)).alias("blocks"),
             F.sum("n").alias("postings"),
-            F.sum(F.octet_length("docids") + F.octet_length("tfs")
-                  + F.octet_length("norms")
-                  + F.octet_length("positions")).alias("payload_bytes"),
             F.sum((F.col("block_id") == 0).cast("long")).alias("terms"),
             F.max("n").alias("max_block_n"))
-        (observed.write.mode("overwrite").partitionBy("bucket")
-                 .parquet(chunk_dir))
+        (observed.write.mode("overwrite").options(**_WRITE_OPTIONS)
+                 .partitionBy("bucket").parquet(chunk_dir))
         m = obs.get
         man = {"chunk": c, "gen": gen,
                "blocks": int(m["blocks"] or 0),
                "postings": int(m["postings"] or 0),
-               "payload_bytes": int(m["payload_bytes"] or 0),
+               "payload_bytes": _parquet_bytes(chunk_dir),
                "terms": int(m["terms"] or 0),
                "elapsed_sec": round(time.time() - t0, 3)}
         with open(mpath, "w") as f:
@@ -299,42 +262,6 @@ def _write_seg_meta(index_dir: str, seg_meta: dict) -> None:
     os.replace(tmp, f"{index_dir}/segments_meta.json")
 
 
-_DECODED_SCHEMA = T.StructType([
-    T.StructField("term", T.StringType(), False),
-    T.StructField("docid", T.LongType(), False),
-    T.StructField("tf", T.IntegerType(), False),
-    T.StructField("positions", T.ArrayType(T.IntegerType()), False),
-    T.StructField("dl_q", T.LongType(), False),
-])
-
-
-def _decode_blocks(with_positions: bool):
-    """mapInPandas: block rows → row-postings (term, docid, tf, positions,
-    dl_q). Vectorized; one output row per posting."""
-
-    def dec(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                docids = delta_decode_docids(r.docids)
-                tfs = varint_decode(r.tfs)
-                dl_q = DECODE_LUT[np.frombuffer(r.norms, dtype=np.uint8)]
-                if with_positions and len(r.positions):
-                    pos = decode_positions(r.positions, tfs)
-                    bounds = np.cumsum(tfs)[:-1]
-                    plists = [a.tolist() for a in np.split(pos, bounds)]
-                else:
-                    plists = [[]] * len(docids)
-                outs.append(pd.DataFrame({
-                    "term": r.term, "docid": docids,
-                    "tf": tfs.astype(np.int32), "positions": plists,
-                    "dl_q": dl_q}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return dec
-
-
 class SegmentsReader:
     """Reader over packed segment generations of an index directory."""
 
@@ -358,6 +285,22 @@ class SegmentsReader:
                 *[f"{base}/gen={g}" for g in self.generations])
         return self._blocks
 
+    @property
+    def legacy_format(self) -> bool:
+        """True when the blocks were written by the retired varint codec
+        (BINARY docids). Read from the relation's schema: no job."""
+        return isinstance(self.blocks.schema["docids"].dataType,
+                          T.BinaryType)
+
+    def require_current(self, caller: str) -> None:
+        """ValueError naming the rebuild when the blocks are legacy."""
+        if self.legacy_format:
+            raise ValueError(
+                f"{caller}: the segments under {self.index_dir} use the "
+                "retired varint block format (BINARY docids); rebuild them "
+                "with build_segments(spark, index_dir, gen=g) for each g "
+                f"in {self.generations}")
+
     def blocks_for(self, terms: list[str], buckets: list[int]) -> DataFrame:
         uniq = sorted(set(terms))
         if not uniq:
@@ -369,23 +312,14 @@ class SegmentsReader:
     def postings_for(self, terms: list[str], buckets: list[int],
                      with_positions: bool = True) -> DataFrame:
         """Decode the packed blocks back to the row-postings schema — the
-        whole query executor runs unchanged on packed segments.
-        with_positions=False skips the position payload at the SCAN (column
-        pruned from the parquet read), not just at decode."""
-        cols = ["term", "docids", "tfs", "norms"]
-        if with_positions:
-            cols.append("positions")
-        return (self.blocks_for(terms, buckets)
-                .select(*cols)
-                .mapInPandas(_decode_blocks(with_positions),
-                             schema=_DECODED_SCHEMA))
+        whole query executor runs unchanged on packed segments."""
+        self.require_current("postings_for")
+        return decode_blocks(self.blocks_for(terms, buckets), with_positions)
 
 
 def decoded_postings(spark: SparkSession, index_dir: str,
                      with_positions: bool = True) -> DataFrame:
     """Full decode of every block (for merge / verification jobs)."""
     r = SegmentsReader(spark, index_dir)
-    return (r.blocks
-            .select("term", "docids", "tfs", "norms", "positions")
-            .mapInPandas(_decode_blocks(with_positions),
-                         schema=_DECODED_SCHEMA))
+    r.require_current("decoded_postings")
+    return decode_blocks(r.blocks, with_positions)

@@ -21,11 +21,14 @@ guarantee (provably identical top-k):
       minimum_should_match term count are computed exactly.
 
 Both phases are DataFrame plans: parquet scans pruned by (bucket, term),
-block filters on JVM-side metadata columns, one vectorized decode
-mapInPandas, groupBy(docid) partial+final aggregation, and Spark's
+block filters on JVM-side metadata columns, and Spark's
 TakeOrderedAndProject as the per-partition-top-k + merge
 (= per-shard collector + SearchPhaseController.mergeTopDocs,
-sv/action/search/SearchPhaseController.java:191-249).
+sv/action/search/SearchPhaseController.java:191-249). Phase A collects
+the ≤ j·|terms| seed blocks as plain arrays and scores them on the driver;
+phase B decodes the surviving blocks with segments.decode_blocks and
+scores them with a Catalyst expression, summed by groupBy(docid) — no
+Python worker runs in either phase.
 """
 
 from __future__ import annotations
@@ -34,47 +37,15 @@ import math
 from collections import Counter
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sparksearch import bm25
 from sparksearch.analysis import analyze
-from sparksearch.codec import BLOCK_SIZE, delta_decode_docids, varint_decode
-from sparksearch.norms import DECODE_LUT
 from sparksearch.queries import Match, calculate_min_should_match
+from sparksearch.segments import BLOCK_SIZE, decode_blocks
 
 __all__ = ["wand_topk"]
-
-_SCORE_SCHEMA = T.StructType([
-    T.StructField("docid", T.LongType(), False),
-    T.StructField("term", T.StringType(), False),
-    T.StructField("score", T.DoubleType(), False),
-])
-
-
-def _decode_score(widf: dict[str, float], avgdl: float,
-                  k1: float, b: float):
-    """mapInPandas: packed blocks → (docid, term, w·idf·tfn) rows."""
-
-    def dec(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                docids = delta_decode_docids(r.docids)
-                tfs = varint_decode(r.tfs).astype(np.float64)
-                dl_q = DECODE_LUT[np.frombuffer(r.norms, dtype=np.uint8)] \
-                    .astype(np.float64)
-                tfn = tfs / (tfs + k1 * (1.0 - b + b * dl_q / avgdl))
-                outs.append(pd.DataFrame({
-                    "docid": docids, "term": r.term,
-                    "score": widf[r.term] * tfn}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return dec
-
 
 def wand_topk(ix, q: Match, k: int = 10,
               k1: float | None = None,
@@ -101,6 +72,7 @@ def wand_topk(ix, q: Match, k: int = 10,
         raise ValueError(
             f"wand_topk needs the stats columns {missing}; this index's "
             "stats table predates them — rebuild it, or use the plan path")
+    ix.segments.require_current("wand_topk")
     toks = analyze(q.text, q.analyzer or ix.search_analyzer)
     terms = [t for t, _ in toks]
     if len({p for _, p in toks}) != len(toks):
@@ -139,16 +111,14 @@ def wand_topk(ix, q: Match, k: int = 10,
 
     # phase A seed: the j highest-impact blocks per term. The window-filter
     # runs distributed (JVM-only), but only the ≤ j·|terms| surviving
-    # ENCODED block rows (~1.5 KB each, bounded at any corpus size) come
-    # back to the driver, which decodes them with the same numpy codec and
-    # derives θ locally — no python-worker dispatch, no shuffle.
+    # block rows (bounded at any corpus size) come back to the driver,
+    # which scores their arrays and derives θ locally — no shuffle.
     j = max(1, math.ceil(k / BLOCK_SIZE)) + 1
-    from pyspark.sql import Window
     wnd = Window.partitionBy("term").orderBy(
         F.col("_tfn_ub").desc(), F.col("salt"), F.col("block_id"))
     seed_df = (blocks.withColumn("_rn", F.row_number().over(wnd))
                .filter(F.col("_rn") <= j)
-               .select("term", "docids", "tfs", "norms"))
+               .select("term", "docids", "tfs", "dlqs"))
 
     stats = ix.stats_for(uniq)
     seed_rows = seed_df.collect()
@@ -169,8 +139,6 @@ def wand_topk(ix, q: Match, k: int = 10,
     gm = {t: _tfn_bound(float(v[2]), float(v[3])) for t, v in stats.items()}
     sum_all = sum(widf[t] * gm.get(t, 0.0) for t in present)
 
-    dec = _decode_score(widf, ix.avgdl, k1, b)
-    payload = ["term", "docids", "tfs", "norms"]
     # msm is counted over the analyzed token list INCLUDING duplicates (an
     # operator='and' query with a repeated term needs msm = len(terms)), so
     # clause-match counts must be weighted by the term's multiplicity cnt[t]
@@ -178,11 +146,20 @@ def wand_topk(ix, q: Match, k: int = 10,
     # and would make repeated-term AND queries unsatisfiable.
     cnt_map = F.create_map(*[x for t in present
                              for x in (F.lit(t), F.lit(int(cnt[t])))])
+    widf_map = F.create_map(*[x for t in present
+                              for x in (F.lit(t), F.lit(widf[t]))])
 
     def agg_scores(df: DataFrame) -> DataFrame:
-        per = df.select(*payload).mapInPandas(dec, schema=_SCORE_SCHEMA)
-        out = (per.groupBy("docid")
-               .agg(F.sum("score").alias("score"),
+        # w·idf·tf/(tf + k1·((1−b) + b·dl_q/avgdl)), in the operation order
+        # of the driver-side phase-A scoring below
+        tf = F.col("tf").cast("double")
+        norm = F.lit(1.0 - b) + F.lit(b) * F.col("dl_q").cast("double") \
+            / F.lit(float(ix.avgdl))
+        tfn = tf / (tf + F.lit(k1) * norm)
+        out = (decode_blocks(df, with_positions=False)
+               .groupBy("docid")
+               .agg(F.sum(F.element_at(widf_map, F.col("term")) * tfn)
+                    .alias("score"),
                     F.sum(F.element_at(cnt_map, F.col("term")))
                      .alias("_nt")))
         if msm > 1:
@@ -193,14 +170,12 @@ def wand_topk(ix, q: Match, k: int = 10,
     acc_s: dict[int, float] = {}
     acc_n: dict[int, int] = {}
     for r in seed_rows:
-        docids = delta_decode_docids(r["docids"])
-        tfs = varint_decode(r["tfs"]).astype(np.float64)
-        dl_q = DECODE_LUT[np.frombuffer(r["norms"], dtype=np.uint8)] \
-            .astype(np.float64)
+        tfs = np.asarray(r["tfs"], dtype=np.float64)
+        dl_q = np.asarray(r["dlqs"], dtype=np.float64)
         tfn = tfs / (tfs + k1 * (1.0 - b + b * dl_q / ix.avgdl))
         sc = widf[r["term"]] * tfn
         w_nt = cnt[r["term"]]
-        for d, s in zip(docids.tolist(), sc.tolist()):
+        for d, s in zip(r["docids"], sc.tolist()):
             acc_s[d] = acc_s.get(d, 0.0) + s
             acc_n[d] = acc_n.get(d, 0) + w_nt
     cand = [(s, -d) for d, s in acc_s.items()
@@ -222,10 +197,8 @@ def wand_topk(ix, q: Match, k: int = 10,
     gmax_other = {t: sum_all - widf[t] * gm.get(t, 0.0) for t in present}
     ub_other = F.create_map(*[x for t in present
                               for x in (F.lit(t), F.lit(gmax_other[t]))])
-    ub_widf = F.create_map(*[x for t in present
-                             for x in (F.lit(t), F.lit(widf[t]))])
     survivors = blocks.filter(
-        F.element_at(ub_widf, F.col("term")) * F.col("_tfn_ub")
+        F.element_at(widf_map, F.col("term")) * F.col("_tfn_ub")
         + F.element_at(ub_other, F.col("term")) >= F.lit(theta))
     return (ix.live(agg_scores(survivors))
             .orderBy(F.col("score").desc(), F.col("docid").asc())

@@ -146,6 +146,31 @@ def test_wand_match_job_count(engine, spark):
     assert total <= 5
 
 
+def test_segment_paths_run_no_python(engine, spark):
+    """The packed-segment read paths decode blocks in Catalyst: the
+    executed plans of a WAND match, a segment-backed plan-path match and
+    decoded_postings hold no Python-worker node."""
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.queries import Match
+    from sparksearch.segments import build_segments, decoded_postings
+    ix, _ = engine
+    build_segments(spark, ix.index_dir, n_chunks=1, partitions=4)
+    ex = Executor(IndexReader(spark, ix.index_dir, use_segments=True))
+    q = Match("text", "hash join")
+    plans = {
+        "wand": _plan_str(ex.search(q, k=10, mode="wand")),
+        "plan": _plan_str(ex.search(q, k=10, mode="plan")),
+        "decoded_postings": _plan_str(decoded_postings(spark,
+                                                       ix.index_dir)),
+    }
+    assert "inline(arrays_zip" in plans["plan"]
+    for path, plan in plans.items():
+        for node in ("MapInPandas", "FlatMapGroupsInPandas",
+                     "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, (path, plan)
+
+
 def test_run_search_bool_filter_job_count(engine, spark):
     """A warm run_search of a bool match + term filter body, total hits
     included, runs at most 8 jobs."""

@@ -1,22 +1,15 @@
-"""Property-based tests (hypothesis) for the codec / norms / msm layers —
+"""Property-based tests (hypothesis) for the norms / analyzer / msm layers —
 the reference's randomized-testing idiom (SURVEY §5: Lucene's
-RandomizedRunner exercises codecs with generated posting lists; the
-equivalents here pin the varint/delta/positions codecs, SmallFloat norm
-monotonicity, analyzer invariants, and minimum_should_match arithmetic
-against generated inputs instead of fixed goldens)."""
+RandomizedRunner exercises codecs with generated inputs; the equivalents
+here pin SmallFloat norm monotonicity, analyzer invariants, and
+minimum_should_match arithmetic against generated inputs instead of fixed
+goldens). The posting-block round trip is a seeded Spark test in
+tests/test_segments.py."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from sparksearch.codec import (
-    decode_positions,
-    delta_decode_docids,
-    delta_encode_docids,
-    encode_positions,
-    varint_decode,
-    varint_encode,
-)
 from sparksearch.norms import (
     DECODE_LUT,
     byte4_to_int,
@@ -24,40 +17,6 @@ from sparksearch.norms import (
     int_to_byte4_np,
     quantize_length,
 )
-
-nonneg = st.integers(min_value=0, max_value=2**62)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(nonneg, max_size=300))
-def test_varint_roundtrip(vals):
-    arr = np.array(vals, dtype=np.int64)
-    assert varint_decode(varint_encode(arr)).tolist() == vals
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=2**40),
-                min_size=1, max_size=300, unique=True))
-def test_delta_docids_roundtrip(ids):
-    ids = sorted(ids)
-    arr = np.array(ids, dtype=np.int64)
-    assert delta_decode_docids(delta_encode_docids(arr)).tolist() == ids
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.lists(st.integers(min_value=0, max_value=10**6),
-                         min_size=1, max_size=20),
-                min_size=1, max_size=50))
-def test_positions_roundtrip(plists):
-    plists = [sorted(set(p)) for p in plists]
-    plists = [p for p in plists if p]
-    if not plists:
-        return
-    tfs = np.array([len(p) for p in plists], dtype=np.int64)
-    flat = np.array([x for p in plists for x in p], dtype=np.int64)
-    buf = encode_positions(flat, tfs)
-    out = decode_positions(buf, tfs)
-    assert out.tolist() == flat.tolist()
 
 
 @settings(max_examples=300, deadline=None)

@@ -1,52 +1,179 @@
-"""Packed segments: codec roundtrip, rank-identity vs row postings,
-block-max WAND exactness, salting, chunk-level resume."""
+"""Packed segments: encode/decode round trip, rank-identity vs row
+postings, block-max WAND exactness, salting, chunk-level resume, refusal
+of the retired varint block format."""
 
 import json
 import os
+import random
 import shutil
 
-import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
-from sparksearch.codec import (
-    delta_decode_docids,
-    delta_encode_docids,
-    decode_positions,
-    encode_positions,
-    varint_decode,
-    varint_encode,
-)
+#: physical-plan nodes that run a Python worker
+_PYTHON_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython",
+                 "BatchEvalPython")
+
+
+def _plan_str(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
 
 # --------------------------------------------------------------------------
-# codec properties (pure NumPy — no Spark)
+# block encode → decode_blocks round trip
 # --------------------------------------------------------------------------
 
 
-@given(st.lists(st.integers(min_value=0, max_value=2**62 - 1), max_size=500))
-@settings(max_examples=200, deadline=None)
-def test_varint_roundtrip(vals):
-    arr = np.array(vals, dtype=np.int64)
-    assert (varint_decode(varint_encode(arr)) == arr).all()
+def _random_postings(rng, n_docs):
+    """Seeded posting lists sized around the 128-doc block boundary, plus
+    two lists long enough to be split into several salts."""
+    rows = []
+    for i, df in enumerate([1, 5, 127, 128, 129, 300, 700]):
+        for d in sorted(rng.sample(range(n_docs), df)):
+            tf = rng.randint(1, 4)
+            rows.append((f"t{i}", d, tf, sorted(rng.sample(range(600), tf)),
+                         rng.choice([3, 8, 40, 96, 200, 1280])))
+    return rows
 
 
-@given(st.sets(st.integers(min_value=0, max_value=10**12), max_size=400))
-@settings(max_examples=200, deadline=None)
-def test_docid_delta_roundtrip(s):
-    arr = np.array(sorted(s), dtype=np.int64)
-    assert (delta_decode_docids(delta_encode_docids(arr)) == arr).all()
+def _build_blocks(spark, ix, rows, n_docs, salt_target):
+    """Write `rows` as an index's row postings + stats and encode them
+    with build_segments; returns (segments meta, postings DataFrame)."""
+    from pyspark.sql import functions as F
+    from sparksearch.segments import build_segments
+
+    post = (spark.createDataFrame(
+        rows, "term string, docid bigint, tf int, positions array<int>, "
+              "dl_q bigint")
+        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(4))))
+    with open(f"{ix}/meta.json", "w") as f:
+        json.dump({"n_docs": n_docs, "stats_path": "stats"}, f)
+    post.groupBy("term").agg(F.count("*").alias("df")) \
+        .write.parquet(f"{ix}/stats")
+    meta = build_segments(spark, ix, salt_target=salt_target, n_chunks=2,
+                          partitions=3, postings_df=post)
+    return meta, post
 
 
-@given(st.lists(st.lists(st.integers(min_value=0, max_value=10**6),
-                         min_size=1, max_size=12),
-                min_size=1, max_size=40))
-@settings(max_examples=100, deadline=None)
-def test_positions_roundtrip(doclists):
-    doclists = [sorted(set(d)) for d in doclists]
-    tfs = np.array([len(d) for d in doclists], dtype=np.int64)
-    pos = np.concatenate([np.array(d, dtype=np.int64) for d in doclists])
-    assert (decode_positions(encode_positions(pos, tfs), tfs) == pos).all()
+def _column_encodings(ix, column):
+    """Parquet encodings of `column`'s leaf in every written block file."""
+    import pyarrow.parquet as pq
+    found = set()
+    for d, _, files in os.walk(f"{ix}/segments"):
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(d, f)).metadata
+            for g in range(md.num_row_groups):
+                for c in range(md.num_columns):
+                    col = md.row_group(g).column(c)
+                    if col.path_in_schema.split(".")[0] == column:
+                        found.update(col.encodings)
+    return found
+
+
+@pytest.fixture(scope="module")
+def random_blocks(spark, tmp_path_factory):
+    """Seeded random posting lists encoded into segment blocks:
+    (index dir, input rows, n_docs, meta, postings DataFrame)."""
+    n_docs = 1000
+    rows = _random_postings(random.Random(11), n_docs)
+    ix = str(tmp_path_factory.mktemp("randblocks"))
+    meta, post = _build_blocks(spark, ix, rows, n_docs, salt_target=200)
+    return ix, rows, n_docs, meta, post
+
+
+def test_block_encode_decode_roundtrip(spark, random_blocks):
+    """Random posting lists through build_segments' Catalyst encode and
+    the Parquet write come back as blocks with consistent metadata, and
+    the encode plan has one shuffle and no Python stage."""
+    from sparksearch.segments import (BLOCK_SIZE, SegmentsReader,
+                                      encode_blocks)
+
+    ix, rows, n_docs, meta, post = random_blocks
+    assert meta["postings"] == len(rows) and meta["max_nsalts"] == 4
+
+    runs: dict = {}
+    for r in SegmentsReader(spark, ix).blocks.collect():
+        runs.setdefault((r.term, r.salt), []).append(r)
+    for run in runs.values():
+        run.sort(key=lambda r: r.block_id)
+        assert [r.block_id for r in run] == list(range(len(run)))
+        assert all(r.n == BLOCK_SIZE for r in run[:-1])
+        for r in run:
+            assert r.n == len(r.docids) == len(r.tfs) == len(r.dlqs) \
+                == len(r.positions) <= BLOCK_SIZE
+            assert r.max_tf == max(r.tfs) and r.min_dlq == min(r.dlqs)
+    # lists of 129 and 300 postings cross a block boundary; the 700-list
+    # is split over 4 salts
+    assert len(runs[("t4", 0)]) == 2
+    assert len({s for t, s in runs if t == "t6"}) == 4
+
+    plan = _plan_str(encode_blocks(post, n_docs, {"t6": 4}, 3))
+    assert plan.count("Exchange") == 1, plan
+    for node in _PYTHON_NODES:
+        assert node not in plan, plan
+
+
+def test_docid_delta_roundtrip(spark, random_blocks):
+    """Docids are stored absolute and ascending in each block, with
+    first/last docid matching the array, delta-coded by Parquet
+    (DELTA_BINARY_PACKED); decode_blocks without positions returns the
+    input (term, docid, tf, dl_q) rows."""
+    from sparksearch.segments import SegmentsReader, decode_blocks
+
+    ix, rows, _, _, _ = random_blocks
+    blocks = SegmentsReader(spark, ix).blocks
+    for r in blocks.collect():
+        assert r.docids == sorted(set(r.docids))
+        assert (r.first_docid, r.last_docid) == (r.docids[0],
+                                                 r.docids[-1])
+    assert "DELTA_BINARY_PACKED" in _column_encodings(ix, "docids")
+    no_pos = decode_blocks(blocks, with_positions=False)
+    got = no_pos.select("term", "docid", "tf", "dl_q", "positions")
+    assert sorted(tuple(r) for r in got.collect()) == \
+        sorted((t, d, tf, q, []) for t, d, tf, _, q in rows)
+
+
+def test_positions_roundtrip(spark, random_blocks):
+    """Per-doc position lists, delta-coded by Parquet
+    (DELTA_BINARY_PACKED), come back from decode_blocks attached to their
+    own (term, docid) with every other column of the input rows."""
+    from sparksearch.segments import SegmentsReader, decode_blocks
+
+    ix, rows, _, _, _ = random_blocks
+    assert "DELTA_BINARY_PACKED" in _column_encodings(ix, "positions")
+    got = decode_blocks(SegmentsReader(spark, ix).blocks).select(
+        "term", "docid", "tf", "positions", "dl_q")
+    assert sorted(tuple(r) for r in got.collect()) == sorted(rows)
+
+
+def test_varint_roundtrip(spark, tmp_path):
+    """Integer payloads at the edges of their column types -- docids over
+    0 .. 2**62 - 1, positions up to 2**31 - 1, the largest dl_q -- keep
+    their exact values through the block encode, the Parquet write and
+    decode_blocks."""
+    from sparksearch.segments import SegmentsReader, decode_blocks
+
+    rng = random.Random(7)
+    n_docs = 2 ** 62
+    rows = []
+    for i, df in enumerate([1, 2, 130, 260]):
+        docids = set(rng.sample(range(n_docs), df - 1)) | {
+            (0, n_docs - 1)[i % 2]}
+        while len(docids) < df:
+            docids.add(rng.randrange(n_docs))
+        for d in sorted(docids):
+            tf = rng.randint(1, 3)
+            pos = sorted(rng.sample(range(2 ** 31 - 1), tf - 1)
+                         + [(0, 2 ** 31 - 1)[d % 2]])
+            rows.append((f"v{i}", d, len(pos), pos,
+                         rng.choice([0, 1, 255, 2 ** 31 - 1])))
+    ix = str(tmp_path)
+    meta, _ = _build_blocks(spark, ix, rows, n_docs, salt_target=10 ** 6)
+    assert meta["postings"] == len(rows)
+    got = decode_blocks(SegmentsReader(spark, ix).blocks).select(
+        "term", "docid", "tf", "positions", "dl_q")
+    assert sorted(tuple(r) for r in got.collect()) == sorted(rows)
 
 
 # --------------------------------------------------------------------------
@@ -194,3 +321,77 @@ def test_fused_bool_all_zero_term_clauses(spark, seg_index):
     ex = Executor(IndexReader(spark, seg_index, use_segments=False))
     q = Bool(must=[Match("text", "...")], should=[Match("text", "!!")])
     assert ex.search(q, k=5, fetch=False).collect() == []
+
+
+def _write_legacy_blocks(index_dir: str, gens: list[int]) -> None:
+    """Hand-write block files in the retired varint format (BINARY
+    payload columns) and register them in segments_meta.json."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({
+        "term": ["w2"], "salt": pa.array([0], pa.int32()),
+        "block_id": pa.array([0], pa.int32()),
+        "n": pa.array([2], pa.int32()),
+        "first_docid": pa.array([3], pa.int64()),
+        "last_docid": pa.array([7], pa.int64()),
+        "docids": [bytes([3, 4])], "tfs": [bytes([1, 2])],
+        "norms": [bytes([9, 9])], "positions": [bytes([0, 1, 4])],
+        "max_tf": pa.array([2], pa.int32()),
+        "min_dlq": pa.array([9], pa.int64()),
+    })
+    shutil.rmtree(f"{index_dir}/segments", ignore_errors=True)
+    for g in gens:
+        d = f"{index_dir}/segments/gen={g}/chunk=0/bucket=0"
+        os.makedirs(d)
+        pq.write_table(table, f"{d}/part-00000.parquet")
+    with open(f"{index_dir}/segments_meta.json", "w") as f:
+        json.dump({"generations": gens, "covers": gens,
+                   "gens": {str(g): {"postings": 2} for g in gens}}, f)
+
+
+def test_legacy_block_format_refused(spark, tmp_path):
+    """Segments in the retired varint format: auto search plans on row
+    postings, the segment readers and merge raise ValueError naming the
+    rebuild, and the named rebuild restores WAND and merge."""
+    from pyspark.sql import functions as F
+    from sparksearch.build import build_index
+    from sparksearch.corpus import synthesize_pages
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.merge import add_generation, merge_segments
+    from sparksearch.queries import Match
+    from sparksearch.segments import SegmentsReader, build_segments
+    from sparksearch.wand import wand_topk
+
+    ix = str(tmp_path / "legacy")
+    pages = synthesize_pages(spark, 400, seed=5, vocab=80, min_len=5,
+                             max_len=40, partitions=4)
+    build_index(pages.filter(F.crc32("url") % 2 == 0), ix, n_buckets=4,
+                partitions=4)
+    add_generation(spark, ix, pages.filter(F.crc32("url") % 2 == 1),
+                   partitions=4, with_segments=False)
+    _write_legacy_blocks(ix, [0, 1])
+
+    q = Match("text", "w2 w5 w9")
+    want = _topk(Executor(IndexReader(spark, ix)), q, 10, "plan")
+    assert len(want) == 10
+    seg = IndexReader(spark, ix, use_segments=True)
+    assert seg.segments.legacy_format and not seg.segments_cover_all()
+    assert _topk(Executor(seg), q, 10, "auto") == want
+    assert _topk(Executor(seg), q, 10, "plan") == want
+    with pytest.raises(ValueError, match=r"build_segments\(.*gen=g"):
+        wand_topk(seg, q, k=10)
+    with pytest.raises(ValueError, match="build_segments"):
+        SegmentsReader(spark, ix).postings_for(["w2"], [0])
+    with pytest.raises(ValueError, match="build_segments"):
+        merge_segments(spark, ix, partitions=4)
+
+    for g in (0, 1):
+        build_segments(spark, ix, gen=g, n_chunks=2, partitions=4)
+    seg = IndexReader(spark, ix, use_segments=True)
+    assert not seg.segments.legacy_format and seg.segments_cover_all()
+    assert _topk(Executor(seg), q, 10, "wand") == want
+    merge_segments(spark, ix, partitions=4)
+    assert _topk(Executor(IndexReader(spark, ix, use_segments=True)), q,
+                 10, "wand") == want

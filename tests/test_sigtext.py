@@ -85,3 +85,16 @@ def test_significance_heuristics_families(spark, index_sf0001):
     mi = significant_terms(ex, q, size=10, min_doc_count=1,
                            heuristic="mutual_information").collect()
     assert mi and all(r.score == r.score for r in mi)  # no NaN survives
+
+
+def test_jlh_zero_when_subset_not_commoner(spark):
+    """JLHScore.getScore returns 0 unless the term is commoner in the
+    foreground than in the background; it never goes negative."""
+    from pyspark.sql import functions as F
+    from sparksearch.aggs import significance_score
+    df = spark.createDataFrame([(1, 50), (5, 50), (2, 10)],
+                               "fg long, bg long")
+    got = [r.s for r in df.select(significance_score(
+        F.col("fg"), 10, F.col("bg"), 100, "jlh").alias("s")).collect()]
+    assert got[0] == 0.0 and got[1] == 0.0
+    assert got[2] == (0.2 - 0.1) * (0.2 / 0.1)

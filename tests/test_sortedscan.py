@@ -120,6 +120,23 @@ def test_search_body_uses_sorted_prefix(spark, sorted_ix):
         False) is None
 
 
+def test_sorted_prefix_gate_off_for_missing_policy(spark, sorted_ix):
+    """A primary sort on the index_sort field with a non-default
+    `missing` policy must not take the build-order file prefix."""
+    from sparksearch import api
+    from sparksearch.exec import Executor
+
+    ex = Executor(sorted_ix)
+    body = {"query": {"term": {"lang": "de"}}, "size": 8}
+    q = api.from_dsl(body["query"])
+    for missing, gated in (("_last", True), ("_first", False), (0, False)):
+        spec = [{"dl": {"order": "asc", "missing": missing}}]
+        cond = api._sorted_scan_cond(ex, {**body, "sort": spec}, q,
+                                     api._parse_sort(spec), False, {},
+                                     False)
+        assert (cond is not None) == gated, missing
+
+
 def test_sorted_topk_errors(spark, sorted_ix):
     from sparksearch.contract import get_engine
     ix_plain, _ = get_engine(spark, SF)
