@@ -450,15 +450,24 @@ def search_df(ex, body: dict, pages: DataFrame | None = None,
             # reference: "`from` parameter must be set to 0 when
             # `search_after` is used" (SearchService validation)
             raise ValueError("search_after cannot combine with from")
-        # keyset: strictly after the cursor in the sort's lexicographic
-        # order (SearchAfterBuilder semantics)
+        # keyset: strictly after the cursor in the order _order_col sorts
+        # by (SearchAfterBuilder semantics). A literal `missing` replaces
+        # nulls, the cursor's too; else nulls sort after every value
+        # under "_last" and before every value under "_first"
         cond = F.lit(False)
         eqs = F.lit(True)
-        for (f, asc, _m), v in zip(sort, after):
+        for (f, asc, missing), v in zip(sort, after):
             c = _sort_col(f)
-            cond = cond | (eqs & ((c > F.lit(v)) if asc
-                                  else (c < F.lit(v))))
-            eqs = eqs & (c == F.lit(v))
+            if missing not in ("_first", "_last"):
+                c = F.coalesce(c, F.lit(missing))
+                v = missing if v is None else v
+            if v is None:
+                gt = c.isNotNull() if missing == "_first" else F.lit(False)
+            else:
+                gt = F.coalesce((c > F.lit(v)) if asc else (c < F.lit(v)),
+                                F.lit(missing == "_last"))
+            cond = cond | (eqs & gt)
+            eqs = eqs & c.eqNullSafe(F.lit(v))
         out = out.filter(cond)
 
     out = out.orderBy(*order).limit(from_ + size)

@@ -429,14 +429,6 @@ def build_index(pages: DataFrame, out_dir: str, analyzer: str = "standard",
                          "exclusive docs layouts")
     spark = pages.sparkSession
     t0 = time.time()
-    _timing = os.environ.get("SPARKSEARCH_TIMING") == "1"
-    _last = [t0]
-
-    def _mark(stage: str) -> None:
-        if _timing:
-            now = time.time()
-            print(f"[build_index] {stage}: {now - _last[0]:.1f}s", flush=True)
-            _last[0] = now
 
     def done(stage: str) -> bool:
         return resume and os.path.exists(f"{out_dir}/{stage}/_SUCCESS")
@@ -506,7 +498,6 @@ def build_index(pages: DataFrame, out_dir: str, analyzer: str = "standard",
 
     run_jobs([_docs_job, _postings_job, _stats_job])
     n_terms, max_df, total_tf = stats_result["v"]
-    _mark("docs_postings_stats_write")
 
     avgdl = (total_tf / n_docs) if n_docs else 1.0
     from sparksearch.analysis_custom import get_custom

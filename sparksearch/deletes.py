@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from sparksearch.build import write_meta, write_stats
 from sparksearch.index import IndexReader
+from sparksearch.segments import next_generation
 
 __all__ = ["delete_by_query", "update_by_query", "expunge_deletes"]
 
@@ -116,7 +117,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
     ix = IndexReader(spark, index_dir)
     if not ix.delete_files:
         return ix.meta
-    new_gen = max(ix.generations) + 1
+    new_gen = next_generation(index_dir)
     n_buckets = ix.n_buckets
 
     from pyspark.sql import Observation
@@ -158,6 +159,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
     # (ADVICE r1: a reader in the window must never see meta generations
     # the segments lack — build first, commit after)
     had_segments = ix.segments_cover_all()
+    old_seg_gens: list[int] = []
     if had_segments:
         from sparksearch.segments import build_segments, _load_seg_meta, \
             _write_seg_meta
@@ -198,9 +200,8 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
     for g in old_gens:
         shutil.rmtree(f"{index_dir}/docs/gen={g}", ignore_errors=True)
         shutil.rmtree(f"{index_dir}/postings/gen={g}", ignore_errors=True)
-        if had_segments:
-            shutil.rmtree(f"{index_dir}/segments/gen={g}",
-                          ignore_errors=True)
+    for g in old_seg_gens:
+        shutil.rmtree(f"{index_dir}/segments/gen={g}", ignore_errors=True)
     shutil.rmtree(f"{index_dir}/deletes", ignore_errors=True)
     if old_stats != stats_path:
         shutil.rmtree(f"{index_dir}/{old_stats}", ignore_errors=True)

@@ -675,12 +675,10 @@ class Executor:
         (scored=False) needs no statistics."""
         tw = self._twindow[-1] if self._twindow else None
         if not scored:
-            return (self.ix.postings_for(terms, with_positions=False,
-                                         time_window=tw)
+            return (self.ix.postings_for(terms, time_window=tw)
                     .select("docid", "term", F.lit(0.0).alias("score")))
         stats = self.ix.stats_for(terms)
-        p = self.ix.postings_for(sorted(stats), with_positions=False,
-                                 time_window=tw).select(
+        p = self.ix.postings_for(sorted(stats), time_window=tw).select(
             "docid", "term", "tf", "dl_q",
             _term_lookup({t: v[0] for t, v in stats.items()})
             .cast("long").alias("df"),
@@ -769,7 +767,7 @@ class Executor:
         def idf(df: int) -> float:
             return math.log1p((self.ix.n_docs - df + 0.5) / (df + 0.5))
 
-        p = self.ix.postings_for(all_terms, with_positions=False) \
+        p = self.ix.postings_for(all_terms) \
             .select("term", "docid", "tf", "dl_q")
         items = list(groups.items())
         aggs = [F.max("dl_q").alias("_dlq")]

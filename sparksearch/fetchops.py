@@ -496,7 +496,7 @@ def _explain_terms(ex, weights: dict, docids: list) -> DataFrame:
     ids = [int(d) for d in docids]
     stats = ix.stats_for(list(cnt))
     df = _term_lookup({t: v[0] for t, v in stats.items()}).cast("long")
-    p = (ix.postings_for(sorted(stats), with_positions=False)
+    p = (ix.postings_for(sorted(stats))
          .filter(F.col("docid").isin(ids))
          .select("docid", "term", "tf", "dl_q", df.alias("df")))
     w = F.create_map(*[x for t, c in cnt.items()

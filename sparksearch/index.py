@@ -24,9 +24,12 @@ class IndexReader:
 
     A reader is pinned to one meta.json commit, so each table is read (its
     files listed and its schema inferred, one Spark job) once per reader,
-    and every later access derives from that relation. Term statistics
-    are cached the same way (`stats_for`). `reload()` or `pit_reader`
-    start a fresh reader with fresh caches.
+    and every later access derives from that relation. Opening the reader
+    reads them (and, on a use_segments reader, the segment blocks), as
+    Lucene's DirectoryReader.open opens its segments: no query, the first
+    included, runs a schema job. Term statistics are cached per reader too
+    (`stats_for`). `reload()` or `pit_reader` start a fresh reader with
+    fresh caches.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -61,8 +64,8 @@ class IndexReader:
         self.n_buckets: int = self.meta["n_buckets"]
         self.generations: list[int] = self.meta.get("generations", [0])
         self.stats_path: str = self.meta.get("stats_path", "stats")
-        #: read postings from packed segment blocks (segments.py) instead of
-        #: the row-postings parquet; same schema, so the executor is shared.
+        #: let Executor.search run match queries by block-max WAND
+        #: over the packed segments (segments.py)
         self.use_segments = use_segments
         self._segments = None
         self._covered: bool | None = None
@@ -85,6 +88,12 @@ class IndexReader:
         #: term → (df, cf, max_tf, min_dlq), or None for a term the index
         #: does not hold; filled by stats_for
         self._term_stats: dict[str, tuple | None] = {}
+        self._gen_union("docs")
+        self._gen_union("postings")
+        self.stats
+        self.deleted
+        if use_segments:
+            self.segments_cover_all()
 
     def reload(self) -> "IndexReader":
         """Re-read meta.json (after add_generation / merge commits)."""
@@ -102,8 +111,8 @@ class IndexReader:
         committed meta generations — false in the crash/mid-build window
         where meta committed a generation whose segments aren't registered
         yet (segments would silently omit those docs) or segments hold an
-        uncommitted generation (phantom docs). postings_for and the WAND
-        path fall back to row postings until merge.ensure_segments repairs.
+        uncommitted generation (phantom docs). The WAND path falls back to
+        row postings until merge.ensure_segments repairs.
         Segments in the retired varint block format count as not covering
         (search plans on row postings until they are rebuilt).
         Cached per reader instance — IndexReader.reload() picks up commits,
@@ -246,14 +255,12 @@ class IndexReader:
         return spark_bucket(term, self.n_buckets)
 
     def postings_for(self, terms: list[str],
-                     with_positions: bool = True,
                      time_window: tuple[str | None, str | None] | None
                      = None) -> DataFrame:
-        """Postings restricted to the query terms (partition-pruned).
+        """Row postings restricted to the query terms (partition-pruned).
 
-        with_positions=False lets the packed-segment decoder skip the
-        position payload entirely (term/phrase queries that only need
-        (docid, tf, dl_q) — the common case).
+        The one posting store: on a use_segments reader too, packed
+        blocks serve only block-max WAND (wand.py).
 
         time_window=(lo, hi) — pday strings in the index's time-partition
         format — prunes whole time directories before any IO (the
@@ -267,9 +274,6 @@ class IndexReader:
         # one scan; bucket IN (...) prunes directories, term IN (...) prunes
         # row groups via min/max on the sorted term column
         buckets = self._buckets_of(uniq)
-        if self.use_segments and self.segments_cover_all():
-            return self.live(self.segments.postings_for(
-                uniq, buckets, with_positions=with_positions))
         # .postings is already live-filtered
         out = (self.postings
                .filter(F.col("bucket").isin(buckets))

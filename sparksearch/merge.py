@@ -19,10 +19,11 @@ analogues here:
 
   merge_segments(spark, dir)
       The compaction pass: unpack every live generation's blocks back to
-      row postings (segments.decode_blocks — each doc's position array
-      moves as it is), re-encode them through the same salted
-      (term, salt)-keyed Catalyst encoder into one consolidated generation,
-      commit segments_meta.json, and delete the old generation dirs.
+      (term, docid, tf, dl_q) rows (segments.decode_blocks; blocks hold
+      no positions, as they serve WAND only), re-encode them through the
+      same salted (term, salt)-keyed Catalyst encoder into one
+      consolidated generation, commit segments_meta.json, and delete the
+      old generation dirs.
       Blocks hold absolute docids, so merging never rewrites docids;
       per-term block sets from disjoint docid ranges simply interleave.
 
@@ -52,6 +53,7 @@ from sparksearch.segments import (
     _write_seg_meta,
     build_segments,
     decode_blocks,
+    next_generation,
 )
 
 __all__ = ["add_generation", "ensure_segments", "merge_segments",
@@ -76,7 +78,7 @@ def add_generation(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     with open(f"{index_dir}/meta.json") as f:
         meta = json.load(f)
     assert meta["version"] == INDEX_VERSION, "index version mismatch"
-    gen = max(meta["generations"]) + 1
+    gen = next_generation(index_dir)
     base = int(meta["n_docs"])
     analyzer = meta["analyzer"]
     if "analyzer_def" in meta:
@@ -204,14 +206,14 @@ def merge_segments(spark: SparkSession, index_dir: str,
     old_gens = list(seg_meta.get("generations", []))
     if len(old_gens) <= 1:
         return seg_meta
-    new_gen = max(old_gens) + 1
+    new_gen = next_generation(index_dir)
 
     reader = SegmentsReader(spark, index_dir)
     reader.require_current("merge_segments")
     covers = list(reader.covers)  # meta gens represented — unchanged by merge
     with open(f"{index_dir}/meta.json") as f:
         n_buckets = json.load(f)["n_buckets"]
-    decoded = (decode_blocks(reader.blocks, with_positions=True)
+    decoded = (decode_blocks(reader.blocks)
                .withColumn("bucket",
                            F.pmod(F.xxhash64("term"), F.lit(n_buckets))))
     gen_meta = build_segments(spark, index_dir, gen=new_gen,

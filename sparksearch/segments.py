@@ -1,10 +1,12 @@
 """Packed posting segments: Parquet-native 128-doc blocks with block-max
-metadata.
+metadata — the impact index block-max WAND reads.
 
-The Spark analogue of Lucene's segment files (reference wiring:
+The Spark analogue of the `.doc` file of Lucene's segments (reference
+wiring:
 /root/reference/server/src/main/java/org/opensearch/index/codec/CodecService.java:37-69
 selects Lucene90PostingsFormat [Lucene 9.4, public]: 128-doc blocks,
-delta/FOR compression, per-block impacts for block-max WAND;
+delta/FOR compression, per-block impacts for block-max WAND, positions in
+their own `.pos` file that WAND never opens;
 /root/reference/server/src/main/java/org/opensearch/index/engine/InternalEngine.java:844-1116
 is the write path). Layout under <index_dir>/segments/:
 
@@ -12,21 +14,24 @@ is the write path). Layout under <index_dir>/segments/:
       term, salt, block_id, n, first_docid, last_docid,
       docids array<bigint> (absolute), tfs array<int>,
       dlqs array<int> (the quantized doc length of each posting),
-      positions array<array<int>> (absolute, per doc),
       max_tf INT, min_dlq BIGINT (the block impact pair — like Lucene's
       (freq, norm) impacts, stored avgdl-independent so the bound stays
       sound when later generations shift global avgdl/N)
   gen=G/_manifest/chunk-J.json            per-chunk lineage + metrics
   segments_meta.json                      generations, params
 
+Blocks serve WAND only: every other query reads the row postings (the
+one posting store), so blocks carry no positions. Older blocks with a
+`positions` column still serve WAND and merge: no reader selects it.
+
 The block payload is plain Parquet arrays, so the engine itself encodes
 and decodes it: blocks are built by Catalyst (a row_number over each
 (term, salt) run numbers the blocks, a sorted collect_list packs them) and
 read back by one inline(arrays_zip(...)) generator (`decode_blocks`). No
 Python worker runs in this layer. Compression is Parquet's: v2 data pages
-with dictionary encoding off for docids and positions make those two
-columns DELTA_BINARY_PACKED (bit-packed gaps, the FOR analogue), and tfs /
-dlqs dictionary-encode (dlqs has at most 256 distinct values).
+with dictionary encoding off for docids make that column
+DELTA_BINARY_PACKED (bit-packed gaps, the FOR analogue), and tfs / dlqs
+dictionary-encode (dlqs has at most 256 distinct values).
 
 Scale design:
   - the encode shuffle is keyed by (term, salt): head terms (Zipf — default
@@ -55,24 +60,23 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = ["build_segments", "encode_blocks", "decode_blocks",
-           "SegmentsReader", "decoded_postings", "BLOCK_SIZE"]
+           "SegmentsReader", "next_generation", "BLOCK_SIZE"]
 
 #: docs per posting block (Lucene90PostingsFormat block size).
 BLOCK_SIZE = 128
 
 #: Parquet writer settings for block files: v2 pages, and no dictionary on
-#: the two high-cardinality int columns, so they are DELTA_BINARY_PACKED
-#: (a dictionary of absolute docids is about 3x the size of their gaps)
+#: the high-cardinality docids, so they are DELTA_BINARY_PACKED (a
+#: dictionary of absolute docids is about 3x the size of their gaps)
 _WRITE_OPTIONS = {
     "parquet.writer.version": "v2",
     "parquet.enable.dictionary#docids.list.element": "false",
-    "parquet.enable.dictionary#positions.list.element.list.element": "false",
 }
 
 
 def encode_blocks(postings: DataFrame, n_docs: int,
                   nsalt_map: dict[str, int], partitions: int) -> DataFrame:
-    """Row postings (bucket, term, docid, tf, positions, dl_q) → one row
+    """Row postings (bucket, term, docid, tf, dl_q) → one row
     per posting block of the segment layout, all in Catalyst.
 
     `nsalt_map` gives the salt count of each head term (others get 1);
@@ -90,8 +94,7 @@ def encode_blocks(postings: DataFrame, n_docs: int,
         "salt",
         ((F.col("docid") * ns_col) / F.lit(max(1, n_docs))).cast("int"))
     run = Window.partitionBy("term", "salt").orderBy("docid")
-    doc = F.struct("docid", "tf", F.col("dl_q").cast("int").alias("dl_q"),
-                   "positions")
+    doc = F.struct("docid", "tf", F.col("dl_q").cast("int").alias("dl_q"))
     packed = (salted
               .repartition(partitions, "term", "salt")
               .withColumn("block_id",
@@ -107,23 +110,17 @@ def encode_blocks(postings: DataFrame, n_docs: int,
         F.col("d.docid").alias("docids"),
         F.col("d.tf").alias("tfs"),
         F.col("d.dl_q").alias("dlqs"),
-        F.col("d.positions").alias("positions"),
         F.array_max("d.tf").alias("max_tf"),
         F.array_min("d.dl_q").cast("long").alias("min_dlq"))
 
 
-def decode_blocks(blocks: DataFrame, with_positions: bool = True
-                  ) -> DataFrame:
-    """Block rows → row postings (term, docid, tf, positions, dl_q), one
-    row per posting, by one Catalyst generator. with_positions=False
-    leaves the positions column out of the scan and yields empty lists."""
-    cols = ["docids", "tfs", "dlqs"] + (["positions"] if with_positions
-                                        else [])
-    rows = blocks.select("term", F.inline(F.arrays_zip(*cols)))
+def decode_blocks(blocks: DataFrame) -> DataFrame:
+    """Block rows → (term, docid, tf, dl_q), one row per posting, by one
+    Catalyst generator."""
+    rows = blocks.select("term", F.inline(F.arrays_zip("docids", "tfs",
+                                                         "dlqs")))
     return rows.select(
         "term", F.col("docids").alias("docid"), F.col("tfs").alias("tf"),
-        F.col("positions") if with_positions
-        else F.array().cast("array<int>").alias("positions"),
         F.col("dlqs").cast("long").alias("dl_q"))
 
 
@@ -262,6 +259,14 @@ def _write_seg_meta(index_dir: str, seg_meta: dict) -> None:
     os.replace(tmp, f"{index_dir}/segments_meta.json")
 
 
+def next_generation(index_dir: str) -> int:
+    """1 + the largest generation in meta.json or segments_meta.json: one
+    number space, so no writer rebuilds over another's generation."""
+    with open(f"{index_dir}/meta.json") as f:
+        gens = json.load(f).get("generations", [0])
+    return 1 + max(gens + _load_seg_meta(index_dir)["generations"])
+
+
 class SegmentsReader:
     """Reader over packed segment generations of an index directory."""
 
@@ -308,18 +313,3 @@ class SegmentsReader:
         return (self.blocks
                 .filter(F.col("bucket").isin(buckets))
                 .filter(F.col("term").isin(uniq)))
-
-    def postings_for(self, terms: list[str], buckets: list[int],
-                     with_positions: bool = True) -> DataFrame:
-        """Decode the packed blocks back to the row-postings schema — the
-        whole query executor runs unchanged on packed segments."""
-        self.require_current("postings_for")
-        return decode_blocks(self.blocks_for(terms, buckets), with_positions)
-
-
-def decoded_postings(spark: SparkSession, index_dir: str,
-                     with_positions: bool = True) -> DataFrame:
-    """Full decode of every block (for merge / verification jobs)."""
-    r = SegmentsReader(spark, index_dir)
-    r.require_current("decoded_postings")
-    return decode_blocks(r.blocks, with_positions)

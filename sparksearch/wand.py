@@ -156,7 +156,7 @@ def wand_topk(ix, q: Match, k: int = 10,
         norm = F.lit(1.0 - b) + F.lit(b) * F.col("dl_q").cast("double") \
             / F.lit(float(ix.avgdl))
         tfn = tf / (tf + F.lit(k1) * norm)
-        out = (decode_blocks(df, with_positions=False)
+        out = (decode_blocks(df)
                .groupBy("docid")
                .agg(F.sum(F.element_at(widf_map, F.col("term")) * tfn)
                     .alias("score"),

@@ -74,6 +74,36 @@ def test_search_after_equals_offset(ex):
     assert p2 == off and len(p2) == 7
 
 
+def test_search_after_pages_nullable_sort_field(ex):
+    """search_after over a sort field that is null for most docs pages
+    through every doc exactly once, in the order of one unpaged request,
+    under each `missing` policy: nulls last, nulls first, and a literal
+    substitute (which the null docs' cursors take too)."""
+    base = {"query": {"term": {"lang": "de"}}, "_source": False,
+            "runtime_mappings": {
+                "m7": "doc['dl'].value % 3 == 0 ? doc['dl'].value % 7 "
+                      ": null"},
+            "docvalue_fields": ["m7"]}
+    for order, missing in (("asc", "_last"), ("desc", "_first"),
+                           ("desc", 3), ("asc", 3)):
+        body = {**base, "sort": [{"m7": {"order": order,
+                                         "missing": missing}},
+                                 {"_doc": "asc"}]}
+        want = [h["_id"] for h in
+                run_search(ex, {**body, "size": 200})["hits"]["hits"]]
+        got, cursor = [], None
+        for _ in range(10):
+            page = {**body, "size": 20}
+            if cursor is not None:
+                page["search_after"] = cursor
+            hits = run_search(ex, page)["hits"]["hits"]
+            if not hits:
+                break
+            got += [h["_id"] for h in hits]
+            cursor = hits[-1]["sort"]
+        assert len(want) == 71 and got == want, (order, missing)
+
+
 def test_aggs_metric_and_histogram(ex):
     m = aggs_df(ex, {"aggs": {"avg_dl": {"avg": {"field": "dl"}}}}) \
         .collect()[0]

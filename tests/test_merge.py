@@ -111,11 +111,13 @@ def test_merge_exact_and_gc(spark, incr_index):
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
     from sparksearch.merge import merge_segments
-    from sparksearch.segments import decoded_postings
+    from sparksearch.segments import SegmentsReader, decode_blocks
 
-    before_posts = {(r["term"], r["docid"], r["tf"]) for r in
-                    decoded_postings(spark, incr_index,
-                                     with_positions=False).collect()}
+    def decoded():
+        return {tuple(r) for r in decode_blocks(
+            SegmentsReader(spark, incr_index).blocks).collect()}
+
+    before_posts = decoded()
     seg_ex = Executor(IndexReader(spark, incr_index, use_segments=True))
     before = {q.text: _url_scores(seg_ex, q, 10, "auto") for q in _queries()}
 
@@ -126,10 +128,7 @@ def test_merge_exact_and_gc(spark, incr_index):
     assert not os.path.exists(f"{incr_index}/segments/gen=0")
     assert not os.path.exists(f"{incr_index}/segments/gen=1")
 
-    after_posts = {(r["term"], r["docid"], r["tf"]) for r in
-                   decoded_postings(spark, incr_index,
-                                    with_positions=False).collect()}
-    assert before_posts == after_posts
+    assert decoded() == before_posts
 
     seg_ex2 = Executor(IndexReader(spark, incr_index, use_segments=True))
     for q in _queries():
@@ -191,6 +190,55 @@ def test_crash_window_coverage_guard(spark, tmp_path_factory):
     merge_segments(spark, out, partitions=4, salt_target=64)
     ix = ix.reload()
     assert ix.segments_cover_all()
+
+
+def test_add_after_merge_keeps_every_generation(spark, tmp_path):
+    """build → add → merge → add → merge: each new generation takes a
+    number no docs/postings or segment generation has held, so an add
+    after a merge never rebuilds over the merged segment generation. The
+    segments then hold every posting (Σ postings == Σdf), cover every
+    committed generation, and WAND equals the row-postings plan; the same
+    holds after expunge_deletes, which leaves one segment generation."""
+    from sparksearch.build import build_index
+    from sparksearch.corpus import synthesize_pages
+    from sparksearch.deletes import delete_by_query, expunge_deletes
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.merge import add_generation, merge_segments
+    from sparksearch.queries import Match
+    from sparksearch.segments import (SegmentsReader, build_segments,
+                                      decode_blocks)
+
+    out = str(tmp_path / "addmerge")
+    pages = synthesize_pages(spark, 300, seed=3, vocab=60, min_len=5,
+                             max_len=40, partitions=4)
+    part = [pages.filter(F.crc32("url") % 3 == i) for i in range(3)]
+    build_index(part[0], out, n_buckets=4, partitions=4)
+    build_segments(spark, out, salt_target=64, n_chunks=1, partitions=4)
+    add_generation(spark, out, part[1], partitions=4, salt_target=64)
+    merge_segments(spark, out, partitions=4, salt_target=64)
+    add_generation(spark, out, part[2], partitions=4, salt_target=64)
+    merge_segments(spark, out, partitions=4, salt_target=64)
+
+    def check():
+        ix = IndexReader(spark, out, use_segments=True)
+        assert ix.segments_cover_all()
+        (g,) = ix.segments.generations
+        assert os.listdir(f"{out}/segments") == [f"gen={g}"]
+        sum_df = ix.stats.agg(F.sum("df")).first()[0]
+        assert decode_blocks(SegmentsReader(spark, out).blocks).count() \
+            == sum_df
+        ex = Executor(ix)
+        for text in ("w1", "w2 w7", "w3 w11 w20"):
+            q = Match("text", text)
+            want = _url_scores(ex, q, 10, "plan")
+            assert len(want) == 10
+            assert _url_scores(ex, q, 10, "wand") == want, text
+
+    check()
+    assert delete_by_query(spark, out, Match("text", "w30")) > 0
+    expunge_deletes(spark, out, partitions=4, salt_target=64)
+    check()
 
 
 def test_point_in_time_reader_snapshot(spark, tmp_path_factory):

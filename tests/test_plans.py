@@ -146,29 +146,55 @@ def test_wand_match_job_count(engine, spark):
     assert total <= 5
 
 
-def test_segment_paths_run_no_python(engine, spark):
-    """The packed-segment read paths decode blocks in Catalyst: the
-    executed plans of a WAND match, a segment-backed plan-path match and
-    decoded_postings hold no Python-worker node."""
+def test_fresh_reader_first_query_runs_no_schema_job(engine, spark):
+    """Opening a reader reads its tables (the segment blocks too on a
+    use_segments reader), so its first query runs the warm query's jobs
+    plus one term-stats collect, and no schema job."""
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
     from sparksearch.queries import Match
-    from sparksearch.segments import build_segments, decoded_postings
+    from sparksearch.segments import build_segments
+    ix, _ = engine
+    build_segments(spark, ix.index_dir, n_chunks=1, partitions=4)
+    q = Match("text", "hash join")
+    for use_segments, mode, warm in ((False, "plan", 3), (True, "wand", 5)):
+        ex = Executor(IndexReader(spark, ix.index_dir,
+                                  use_segments=use_segments))
+        jobs = _job_count(spark,
+                          lambda: ex.search(q, k=10, mode=mode).collect())
+        assert jobs <= warm + 1, (mode, jobs)
+
+
+def test_segment_paths_run_no_python(engine, spark):
+    """Packed blocks serve WAND only: on a use_segments reader a
+    plan-path match scans the row postings and decodes no blocks. The
+    WAND match and the block decode merge uses hold no Python-worker
+    node, and WAND's scans read no positions."""
+    import re
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.queries import Match
+    from sparksearch.segments import (SegmentsReader, build_segments,
+                                      decode_blocks)
     ix, _ = engine
     build_segments(spark, ix.index_dir, n_chunks=1, partitions=4)
     ex = Executor(IndexReader(spark, ix.index_dir, use_segments=True))
     q = Match("text", "hash join")
+    plan = _plan_str(ex.search(q, k=10, mode="plan"))
+    assert "/postings" in plan and "/segments" not in plan, plan
+    assert "arrays_zip" not in plan, plan
     plans = {
         "wand": _plan_str(ex.search(q, k=10, mode="wand")),
-        "plan": _plan_str(ex.search(q, k=10, mode="plan")),
-        "decoded_postings": _plan_str(decoded_postings(spark,
-                                                       ix.index_dir)),
+        "decode_blocks": _plan_str(decode_blocks(
+            SegmentsReader(spark, ix.index_dir).blocks)),
     }
-    assert "inline(arrays_zip" in plans["plan"]
-    for path, plan in plans.items():
+    assert "/segments" in plans["wand"]
+    schemas = re.findall(r"ReadSchema: (struct<[^ ]*)", plans["wand"])
+    assert schemas and not any("positions" in r for r in schemas), schemas
+    for path, p in plans.items():
         for node in ("MapInPandas", "FlatMapGroupsInPandas",
                      "ArrowEvalPython", "BatchEvalPython"):
-            assert node not in plan, (path, plan)
+            assert node not in p, (path, p)
 
 
 def test_run_search_bool_filter_job_count(engine, spark):

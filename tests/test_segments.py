@@ -1,6 +1,6 @@
-"""Packed segments: encode/decode round trip, rank-identity vs row
-postings, block-max WAND exactness, salting, chunk-level resume, refusal
-of the retired varint block format."""
+"""Packed segments: encode/decode round trip, position-free blocks,
+block-max WAND exactness, salting, chunk-level resume, blocks in the
+earlier layouts (with positions; the retired varint format)."""
 
 import json
 import os
@@ -84,16 +84,18 @@ def random_blocks(spark, tmp_path_factory):
 
 def test_block_encode_decode_roundtrip(spark, random_blocks):
     """Random posting lists through build_segments' Catalyst encode and
-    the Parquet write come back as blocks with consistent metadata, and
-    the encode plan has one shuffle and no Python stage."""
+    the Parquet write come back as position-free blocks with consistent
+    metadata, and the encode plan has one shuffle and no Python stage."""
     from sparksearch.segments import (BLOCK_SIZE, SegmentsReader,
                                       encode_blocks)
 
     ix, rows, n_docs, meta, post = random_blocks
     assert meta["postings"] == len(rows) and meta["max_nsalts"] == 4
 
+    blocks = SegmentsReader(spark, ix).blocks
+    assert "positions" not in blocks.columns
     runs: dict = {}
-    for r in SegmentsReader(spark, ix).blocks.collect():
+    for r in blocks.collect():
         runs.setdefault((r.term, r.salt), []).append(r)
     for run in runs.values():
         run.sort(key=lambda r: r.block_id)
@@ -101,7 +103,7 @@ def test_block_encode_decode_roundtrip(spark, random_blocks):
         assert all(r.n == BLOCK_SIZE for r in run[:-1])
         for r in run:
             assert r.n == len(r.docids) == len(r.tfs) == len(r.dlqs) \
-                == len(r.positions) <= BLOCK_SIZE
+                <= BLOCK_SIZE
             assert r.max_tf == max(r.tfs) and r.min_dlq == min(r.dlqs)
     # lists of 129 and 300 postings cross a block boundary; the 700-list
     # is split over 4 salts
@@ -117,8 +119,8 @@ def test_block_encode_decode_roundtrip(spark, random_blocks):
 def test_docid_delta_roundtrip(spark, random_blocks):
     """Docids are stored absolute and ascending in each block, with
     first/last docid matching the array, delta-coded by Parquet
-    (DELTA_BINARY_PACKED); decode_blocks without positions returns the
-    input (term, docid, tf, dl_q) rows."""
+    (DELTA_BINARY_PACKED); decode_blocks returns the input
+    (term, docid, tf, dl_q) rows and no positions."""
     from sparksearch.segments import SegmentsReader, decode_blocks
 
     ix, rows, _, _, _ = random_blocks
@@ -128,30 +130,47 @@ def test_docid_delta_roundtrip(spark, random_blocks):
         assert (r.first_docid, r.last_docid) == (r.docids[0],
                                                  r.docids[-1])
     assert "DELTA_BINARY_PACKED" in _column_encodings(ix, "docids")
-    no_pos = decode_blocks(blocks, with_positions=False)
-    got = no_pos.select("term", "docid", "tf", "dl_q", "positions")
+    got = decode_blocks(blocks)
+    assert got.columns == ["term", "docid", "tf", "dl_q"]
     assert sorted(tuple(r) for r in got.collect()) == \
-        sorted((t, d, tf, q, []) for t, d, tf, _, q in rows)
+        sorted((t, d, tf, q) for t, d, tf, _, q in rows)
 
 
-def test_positions_roundtrip(spark, random_blocks):
-    """Per-doc position lists, delta-coded by Parquet
-    (DELTA_BINARY_PACKED), come back from decode_blocks attached to their
-    own (term, docid) with every other column of the input rows."""
-    from sparksearch.segments import SegmentsReader, decode_blocks
+def test_positions_roundtrip(spark, random_blocks, seg_index):
+    """Blocks carry no positions: the written block files have no
+    `positions` column although the input postings do. Positional
+    queries on a use_segments reader read row postings and equal the
+    plain reader."""
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.queries import (MatchPhrase, SpanFirst, SpanNear,
+                                     SpanNot, SpanOr)
+    from sparksearch.segments import SegmentsReader
 
-    ix, rows, _, _, _ = random_blocks
-    assert "DELTA_BINARY_PACKED" in _column_encodings(ix, "positions")
-    got = decode_blocks(SegmentsReader(spark, ix).blocks).select(
-        "term", "docid", "tf", "positions", "dl_q")
-    assert sorted(tuple(r) for r in got.collect()) == sorted(rows)
+    ix, _, _, _, post = random_blocks
+    assert "positions" in post.columns
+    assert _column_encodings(ix, "positions") == set()
+    assert "positions" not in SegmentsReader(spark, ix).blocks.columns
+
+    row_ex = Executor(IndexReader(spark, seg_index))
+    seg_ex = Executor(IndexReader(spark, seg_index, use_segments=True))
+    for q in (MatchPhrase("text", "hash join"),
+              MatchPhrase("text", "fast scan", slop=1),
+              SpanNear("text", ("hash", "join"), slop=1),
+              SpanFirst("text", ("join",), end=5),
+              SpanOr("text", ("hash", "table")),
+              SpanNot("text", "join", "hash", pre=1, post=1)):
+        want = _topk(row_ex, q, 10, "plan")
+        assert want, q
+        for mode in ("plan", "auto"):
+            assert _topk(seg_ex, q, 10, mode) == want, (q, mode)
 
 
 def test_varint_roundtrip(spark, tmp_path):
     """Integer payloads at the edges of their column types -- docids over
-    0 .. 2**62 - 1, positions up to 2**31 - 1, the largest dl_q -- keep
-    their exact values through the block encode, the Parquet write and
-    decode_blocks."""
+    0 .. 2**62 - 1, the largest dl_q -- keep their exact values through
+    the block encode, the Parquet write and decode_blocks; the input's
+    positions are not stored."""
     from sparksearch.segments import SegmentsReader, decode_blocks
 
     rng = random.Random(7)
@@ -164,16 +183,17 @@ def test_varint_roundtrip(spark, tmp_path):
             docids.add(rng.randrange(n_docs))
         for d in sorted(docids):
             tf = rng.randint(1, 3)
-            pos = sorted(rng.sample(range(2 ** 31 - 1), tf - 1)
-                         + [(0, 2 ** 31 - 1)[d % 2]])
-            rows.append((f"v{i}", d, len(pos), pos,
+            pos = sorted(rng.sample(range(2 ** 31 - 1), tf))
+            rows.append((f"v{i}", d, tf, pos,
                          rng.choice([0, 1, 255, 2 ** 31 - 1])))
     ix = str(tmp_path)
     meta, _ = _build_blocks(spark, ix, rows, n_docs, salt_target=10 ** 6)
     assert meta["postings"] == len(rows)
-    got = decode_blocks(SegmentsReader(spark, ix).blocks).select(
-        "term", "docid", "tf", "positions", "dl_q")
-    assert sorted(tuple(r) for r in got.collect()) == sorted(rows)
+    blocks = SegmentsReader(spark, ix).blocks
+    assert "positions" not in blocks.columns
+    got = decode_blocks(blocks).select("term", "docid", "tf", "dl_q")
+    assert sorted(tuple(r) for r in got.collect()) == \
+        sorted((t, d, tf, q) for t, d, tf, _, q in rows)
 
 
 # --------------------------------------------------------------------------
@@ -225,6 +245,8 @@ def _queries():
 
 
 def test_segment_decode_rank_identical(spark, seg_index):
+    """A use_segments reader plans every query exactly as a plain
+    reader does."""
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
@@ -267,21 +289,21 @@ def test_wand_prunes_blocks(spark, seg_index):
 def test_segment_resume_chunk_level(spark, seg_index, tmp_path):
     """Kill-and-resume: drop one chunk, rebuild with resume=True, and the
     re-built index must decode to the identical posting set."""
-    from sparksearch.segments import build_segments, decoded_postings
+    from sparksearch.segments import (SegmentsReader, build_segments,
+                                      decode_blocks)
 
-    before = {(r["term"], r["docid"], r["tf"]) for r in
-              decoded_postings(spark, seg_index, with_positions=False)
-              .collect()}
+    def decoded():
+        return {tuple(r) for r in decode_blocks(
+            SegmentsReader(spark, seg_index).blocks).collect()}
+
+    before = decoded()
     gen_dir = f"{seg_index}/segments/gen=0"
     shutil.rmtree(f"{gen_dir}/chunk=1")
     os.remove(f"{gen_dir}/_manifest/chunk-1.json")
     meta = build_segments(spark, seg_index, salt_target=64, n_chunks=3,
                           partitions=4, resume=True)
     assert len(meta["chunks"]) == 3
-    after = {(r["term"], r["docid"], r["tf"]) for r in
-             decoded_postings(spark, seg_index, with_positions=False)
-             .collect()}
-    assert before == after
+    assert decoded() == before
 
 
 def test_manifest_metrics(seg_index):
@@ -351,9 +373,10 @@ def _write_legacy_blocks(index_dir: str, gens: list[int]) -> None:
 
 
 def test_legacy_block_format_refused(spark, tmp_path):
-    """Segments in the retired varint format: auto search plans on row
-    postings, the segment readers and merge raise ValueError naming the
-    rebuild, and the named rebuild restores WAND and merge."""
+    """Segments in the retired varint format: auto and plan search run on
+    row postings, WAND, the reader's format check and merge raise
+    ValueError naming the rebuild, and the named rebuild restores WAND
+    and merge."""
     from pyspark.sql import functions as F
     from sparksearch.build import build_index
     from sparksearch.corpus import synthesize_pages
@@ -383,7 +406,7 @@ def test_legacy_block_format_refused(spark, tmp_path):
     with pytest.raises(ValueError, match=r"build_segments\(.*gen=g"):
         wand_topk(seg, q, k=10)
     with pytest.raises(ValueError, match="build_segments"):
-        SegmentsReader(spark, ix).postings_for(["w2"], [0])
+        SegmentsReader(spark, ix).require_current("decode")
     with pytest.raises(ValueError, match="build_segments"):
         merge_segments(spark, ix, partitions=4)
 
@@ -395,3 +418,73 @@ def test_legacy_block_format_refused(spark, tmp_path):
     merge_segments(spark, ix, partitions=4)
     assert _topk(Executor(IndexReader(spark, ix, use_segments=True)), q,
                  10, "wand") == want
+
+
+def _add_positions_column(spark, index_dir: str, gen: int) -> None:
+    """Rewrite segment generation `gen` in the earlier block layout,
+    which also stored per-doc positions (`positions array<array<int>>`,
+    here 0..tf-1 for each doc), keeping its chunk/bucket layout and
+    manifests."""
+    from pyspark.sql import functions as F
+
+    gen_dir = f"{index_dir}/segments/gen={gen}"
+    tmp = f"{index_dir}/_old_layout"
+    (spark.read.parquet(gen_dir)
+     .withColumn("positions", F.transform(
+         "tfs", lambda tf: F.sequence(F.lit(0), tf - 1)))
+     .write.partitionBy("chunk", "bucket").parquet(tmp))
+    for d in os.listdir(gen_dir):
+        if d.startswith("chunk="):
+            shutil.rmtree(f"{gen_dir}/{d}")
+    for d in os.listdir(tmp):
+        if d.startswith("chunk="):
+            shutil.move(f"{tmp}/{d}", f"{gen_dir}/{d}")
+    shutil.rmtree(tmp)
+
+
+def test_mixed_block_layouts_serve_wand_and_merge(spark, tmp_path):
+    """A generation of blocks in the earlier layout (with a `positions`
+    column) next to a position-free one: WAND reads neither generation's
+    positions and equals the row plan, and merge_segments writes
+    position-free blocks that still equal it."""
+    import re
+    from pyspark.sql import functions as F
+    from sparksearch.build import build_index
+    from sparksearch.corpus import synthesize_pages
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.merge import add_generation, merge_segments
+    from sparksearch.queries import Match
+    from sparksearch.segments import build_segments
+
+    ix = str(tmp_path / "mixed")
+    pages = synthesize_pages(spark, 400, seed=9, vocab=80, min_len=5,
+                             max_len=40, partitions=4)
+    build_index(pages.filter(F.crc32("url") % 2 == 0), ix, n_buckets=4,
+                partitions=4)
+    build_segments(spark, ix, salt_target=64, n_chunks=2, partitions=4)
+    _add_positions_column(spark, ix, 0)
+    add_generation(spark, ix, pages.filter(F.crc32("url") % 2 == 1),
+                   partitions=4, salt_target=64, n_chunks=2)
+    assert "positions" in spark.read.parquet(
+        f"{ix}/segments/gen=0").columns
+    assert "positions" not in spark.read.parquet(
+        f"{ix}/segments/gen=1").columns
+
+    queries = [Match("text", "w2 w5 w9"), Match("text", "w1"),
+               Match("text", "w3 w4", operator="and")]
+    row_ex = Executor(IndexReader(spark, ix))
+    want = [_topk(row_ex, q, 10, "plan") for q in queries]
+    seg_ex = Executor(IndexReader(spark, ix, use_segments=True))
+    assert seg_ex.ix.segments_cover_all()
+    assert [_topk(seg_ex, q, 10, "wand") for q in queries] == want
+    plan = _plan_str(seg_ex.search(queries[0], k=10, mode="wand"))
+    schemas = re.findall(r"ReadSchema: (struct<[^ ]*)", plan)
+    assert schemas and not any("positions" in r for r in schemas), schemas
+
+    seg_meta = merge_segments(spark, ix, partitions=4, salt_target=64)
+    (g,) = seg_meta["generations"]
+    assert "positions" not in spark.read.parquet(
+        f"{ix}/segments/gen={g}").columns
+    seg_ex = Executor(IndexReader(spark, ix, use_segments=True))
+    assert [_topk(seg_ex, q, 10, "wand") for q in queries] == want

@@ -88,7 +88,7 @@ def test_lmd_score_matches_formula(spark, index_sf0001):
     row = (ex._plan(Match("text", "join"), scored=True)
            .orderBy(F.col("score").desc(), "docid").limit(1).collect()[0])
     ix = index_sf0001
-    post = (ix.postings_for(["join"], with_positions=False)
+    post = (ix.postings_for(["join"])
             .filter(F.col("docid") == row.docid).collect()[0])
     cf = ix.stats_for(["join"])["join"][1]
     T = ix.meta["total_tf"]
