@@ -106,7 +106,10 @@ def _iter_streams(data: bytes):
         if end < 0:
             end = len(data)
         yield dct, data[start:end]
-_BT_RE = re.compile(rb"BT(.*?)ET", re.DOTALL)
+# a BT..ET text block; literal strings (one level of nested parens) are
+# skipped whole, so a shown "ET" does not end the block
+_BT_RE = re.compile(rb"BT((?:\((?:[^()\\]|\\.|\((?:[^()\\]|\\.)*\))*\)"
+                    rb"|[^(])*?)ET", re.DOTALL)
 _OP_RE = re.compile(rb"[A-Za-z*]+|'|\"")
 _TITLE_RE = re.compile(rb"/Title\s*\(")
 

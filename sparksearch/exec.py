@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from sparksearch import bm25
 from sparksearch.analysis import analyze
-from sparksearch.index import IndexReader
+from sparksearch.index import IndexReader, literal_frame
 from sparksearch.queries import (
     Bool, Boosting, ConstantScore, DecayFunction, DisMax, Exists,
     CommonTerms, DistanceFeature,
@@ -992,9 +992,8 @@ class Executor:
             msm = calculate_min_should_match(
                 len(terms), q.minimum_should_match, has_required=False)
         spark = self.ix.spark
-        qdf = spark.createDataFrame(
-            [(t, self._fuzz_of(t, q.fuzziness)) for t in uniq],
-            "qt string, fz int")
+        qdf = literal_frame(spark, ["qt", "fz"], [
+            (t, self._fuzz_of(t, q.fuzziness)) for t in uniq])
         transpose = bool(getattr(q, "fuzzy_transpositions", True))
         max_exp = int(getattr(q, "max_expansions", 50) or 50)
         d = self.ix.stats.select("term", "df")
@@ -1019,8 +1018,8 @@ class Executor:
             return self._empty()
         exp_terms = sorted({r["term"] for r in pair_rows})
         per = self._term_scores(exp_terms, scored)
-        pairs = F.broadcast(spark.createDataFrame(
-            [(r["qt"], r["term"]) for r in pair_rows], "qt string, term string"))
+        pairs = F.broadcast(literal_frame(
+            spark, ["qt", "term"], [(r["qt"], r["term"]) for r in pair_rows]))
         perq = (per.join(pairs, "term")
                 .groupBy("docid", "qt")
                 .agg(F.max("score").alias("score")))

@@ -171,7 +171,8 @@ def suggest_terms(ix, text: str, max_edits: int = 2,
     if not toks:
         return ix.stats.select(
             F.lit("").alias("input"), "term", "df").limit(0)
-    inputs = ix.spark.createDataFrame([(t,) for t in toks], "input string")
+    from sparksearch.index import literal_frame
+    inputs = literal_frame(ix.spark, ["input"], [(t,) for t in toks])
     d = ix.stats.select("term", "df")
     if suggest_mode in ("missing", "popular"):
         # df of the input token itself (0 when absent from the index)

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["IndexReader", "index_stats", "set_alias", "resolve_alias",
-           "open_index", "pit_reader", "IMPACT_COLUMNS"]
+           "open_index", "pit_reader", "literal_frame", "IMPACT_COLUMNS"]
 
 #: term-level impact pair in the stats table: the block-max WAND bound
 #: needs both (wand.wand_topk)
@@ -311,6 +311,17 @@ class IndexReader:
                 self._term_stats[t] = got.get(t)
         return {t: v for t in set(terms)
                 if (v := self._term_stats[t]) is not None}
+
+
+def literal_frame(spark: SparkSession, names: list[str],
+                  rows: list[tuple]) -> DataFrame:
+    """A few driver-side rows as a JVM literal relation: one
+    array-of-structs literal expanded by inline(). A DataFrame built from
+    a Python list instead runs a Python-worker stage, one task per
+    default-parallelism partition, each time it is scanned."""
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(v).alias(n) for n, v in zip(names, r)])
+        for r in rows])))
 
 
 def pit_reader(spark: SparkSession, pit: dict) -> "IndexReader":

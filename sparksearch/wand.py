@@ -25,10 +25,12 @@ block filters on JVM-side metadata columns, and Spark's
 TakeOrderedAndProject as the per-partition-top-k + merge
 (= per-shard collector + SearchPhaseController.mergeTopDocs,
 sv/action/search/SearchPhaseController.java:191-249). Phase A collects
-the ≤ j·|terms| seed blocks as plain arrays and scores them on the driver;
-phase B decodes the surviving blocks with segments.decode_blocks and
-scores them with a Catalyst expression, summed by groupBy(docid) — no
-Python worker runs in either phase.
+the ≤ j·|terms|·BLOCK_SIZE postings of its seed blocks, decoded with
+segments.decode_blocks and stripped of tombstoned docs in the same plan
+(the collector-side liveDocs check), and scores them on the driver;
+phase B decodes the surviving blocks the same way and scores them with a
+Catalyst expression, summed by groupBy(docid) — no Python worker runs in
+either phase, with or without deletes.
 """
 
 from __future__ import annotations
@@ -36,7 +38,6 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -80,7 +81,7 @@ def wand_topk(ix, q: Match, k: int = 10,
             "wand_topk scores exact terms independently; synonym-stacked "
             "token streams need the blended plan path "
             "(Executor.search mode='plan' falls back automatically)")
-    if not terms:
+    if not terms or k <= 0:
         return ix.docs.select(
             "docid", F.lit(0.0).alias("score")).limit(0)
     cnt = Counter(terms)
@@ -91,9 +92,17 @@ def wand_topk(ix, q: Match, k: int = 10,
         msm = calculate_min_should_match(
             len(terms), q.minimum_should_match, has_required=False)
 
+    stats = ix.stats_for(uniq)
+    present = [t for t in uniq if t in stats]
+    if not present:
+        return ix.docs.select("docid", F.lit(0.0).alias("score")).limit(0)
+    # (k1+1) folded into the per-term weight: decode emits plain
+    # tf/(tf+k1·norm), so score = w·idf·(k1+1)·tfn = LegacyBM25Similarity
+    widf = {t: cnt[t] * bm25.idf(stats[t][0], ix.n_docs) * (k1 + 1.0)
+            for t in present}
+
     # buckets are pure-Python xxhash64 (no job)
-    buckets = ix._buckets_of(uniq)
-    blocks = ix.segments.blocks_for(uniq, buckets)
+    blocks = ix.segments.blocks_for(present, ix._buckets_of(present))
     # block upper bound from the stored (max_tf, min_dlq) impact pair and the
     # CURRENT global avgdl — tfn is monotone up in tf, down in dl, so this
     # dominates every doc in the block even after avgdl drifted across
@@ -109,27 +118,19 @@ def wand_topk(ix, q: Match, k: int = 10,
                                 / float(ix.avgdl))))
     blocks = blocks.withColumn("_tfn_ub", tfn_ub)
 
-    # phase A seed: the j highest-impact blocks per term. The window-filter
-    # runs distributed (JVM-only), but only the ≤ j·|terms| surviving
-    # block rows (bounded at any corpus size) come back to the driver,
-    # which scores their arrays and derives θ locally — no shuffle.
+    # phase A seed: the j highest-impact blocks per term, decoded and
+    # stripped of tombstoned docs in one JVM-only plan. Only their
+    # ≤ j·|terms|·BLOCK_SIZE live postings (bounded at any corpus size)
+    # come back to the driver, which scores them and derives θ locally.
+    # θ must lower-bound the k-th LIVE score — a deleted doc in the seed
+    # would over-prune.
     j = max(1, math.ceil(k / BLOCK_SIZE)) + 1
     wnd = Window.partitionBy("term").orderBy(
         F.col("_tfn_ub").desc(), F.col("salt"), F.col("block_id"))
-    seed_df = (blocks.withColumn("_rn", F.row_number().over(wnd))
-               .filter(F.col("_rn") <= j)
-               .select("term", "docids", "tfs", "dlqs"))
-
-    stats = ix.stats_for(uniq)
-    seed_rows = seed_df.collect()
-
-    idf = {t: bm25.idf(v[0], ix.n_docs) for t, v in stats.items()}
-    # (k1+1) folded into the per-term weight: decode emits plain
-    # tf/(tf+k1·norm), so score = w·idf·(k1+1)·tfn = LegacyBM25Similarity
-    widf = {t: cnt[t] * idf.get(t, 0.0) * (k1 + 1.0) for t in uniq}
-    present = [t for t in uniq if t in idf]
-    if not present:
-        return ix.docs.select("docid", F.lit(0.0).alias("score")).limit(0)
+    seed_rows = ix.live(decode_blocks(
+        blocks.withColumn("_rn", F.row_number().over(wnd))
+        .filter(F.col("_rn") <= j))) \
+        .select("term", "docid", "tf", "dl_q").collect()
 
     # per-term global bound gmax: from the term-level (max_tf, min_dlq)
     # impact pair in the stats table — zero extra jobs.
@@ -137,7 +138,7 @@ def wand_topk(ix, q: Match, k: int = 10,
     # max over blocks tfn_ub(block) ≥ any doc's tfn, so pruning stays
     # exact (marginally looser than the per-block max).
     gm = {t: _tfn_bound(float(v[2]), float(v[3])) for t, v in stats.items()}
-    sum_all = sum(widf[t] * gm.get(t, 0.0) for t in present)
+    sum_all = sum(widf[t] * gm[t] for t in present)
 
     # msm is counted over the analyzed token list INCLUDING duplicates (an
     # operator='and' query with a repeated term needs msm = len(terms)), so
@@ -166,35 +167,20 @@ def wand_topk(ix, q: Match, k: int = 10,
             out = out.filter(F.col("_nt") >= msm)
         return out.select("docid", "score")
 
-    # phase A scoring, driver-local over the collected seed rows
+    # phase A scoring, driver-local over the collected live seed postings
     acc_s: dict[int, float] = {}
     acc_n: dict[int, int] = {}
-    for r in seed_rows:
-        tfs = np.asarray(r["tfs"], dtype=np.float64)
-        dl_q = np.asarray(r["dlqs"], dtype=np.float64)
-        tfn = tfs / (tfs + k1 * (1.0 - b + b * dl_q / ix.avgdl))
-        sc = widf[r["term"]] * tfn
-        w_nt = cnt[r["term"]]
-        for d, s in zip(r["docids"], sc.tolist()):
-            acc_s[d] = acc_s.get(d, 0.0) + s
-            acc_n[d] = acc_n.get(d, 0) + w_nt
-    cand = [(s, -d) for d, s in acc_s.items()
-            if msm <= 1 or acc_n[d] >= msm]
-    if cand and ix.deleted is not None:
-        # θ must lower-bound the k-th LIVE score — a deleted doc in the
-        # seed would over-prune. One bounded semi-join: seed docids
-        # (driver-local, block-sized) against the tombstone set.
-        seed_ids = ix.spark.createDataFrame(
-            [(int(-d),) for _, d in cand], "docid bigint")
-        gone = {r["docid"] for r in
-                seed_ids.join(ix.deleted, "docid", "left_semi").collect()}
-        cand = [(s, d) for s, d in cand if -d not in gone]
-    cand.sort(reverse=True)
-    theta = cand[k - 1][0] if len(cand) >= k else 0.0
+    for term, d, tf, dl_q in seed_rows:
+        tfn = tf / (tf + k1 * (1.0 - b + b * dl_q / ix.avgdl))
+        acc_s[d] = acc_s.get(d, 0.0) + widf[term] * tfn
+        acc_n[d] = acc_n.get(d, 0) + cnt[term]
+    cand = sorted((s for d, s in acc_s.items()
+                   if msm <= 1 or acc_n[d] >= msm), reverse=True)
+    theta = cand[k - 1] if len(cand) >= k else 0.0
 
     # phase B: prune blocks whose best-possible doc can't reach θ, then
     # score the survivors exactly
-    gmax_other = {t: sum_all - widf[t] * gm.get(t, 0.0) for t in present}
+    gmax_other = {t: sum_all - widf[t] * gm[t] for t in present}
     ub_other = F.create_map(*[x for t in present
                               for x in (F.lit(t), F.lit(gmax_other[t]))])
     survivors = blocks.filter(

@@ -146,6 +146,95 @@ def test_wand_match_job_count(engine, spark):
     assert total <= 5
 
 
+@pytest.fixture(scope="module")
+def tomb_engine(engine, spark, tmp_path_factory):
+    """use_segments Executor over a copy of the module's index whose
+    tombstones hit the top-10 of "hash join", plus a plain Executor over
+    the same commit."""
+    import shutil
+    from sparksearch.deletes import delete_by_query
+    from sparksearch.exec import Executor
+    from sparksearch.index import IndexReader
+    from sparksearch.queries import Term
+    from sparksearch.segments import build_segments
+
+    out = str(tmp_path_factory.mktemp("tombix"))
+    shutil.copytree(engine[0].index_dir, out, dirs_exist_ok=True)
+    build_segments(spark, out, salt_target=256, n_chunks=1, partitions=4)
+    assert delete_by_query(spark, out, Term("lang", "en")) > 0
+    return (Executor(IndexReader(spark, out, use_segments=True)),
+            Executor(IndexReader(spark, out)))
+
+
+def _refuse_local_frames(monkeypatch) -> None:
+    """Make every DataFrame built from driver-side rows (a Python-worker
+    stage) raise."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    def refuse(*a, **kw):
+        raise AssertionError("driver-side rows turned into a DataFrame")
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+
+
+def _top(df) -> list[tuple]:
+    return [(r["docid"], r["score"]) for r in df.collect()]
+
+
+def test_wand_with_deletes_builds_no_local_frame(tomb_engine, monkeypatch):
+    """WAND drops tombstoned seed postings inside its own plan: on an
+    index with deletes it builds no DataFrame from driver-side rows (a
+    Python-worker stage) and still returns the plan path's top-10."""
+    from sparksearch.queries import Match
+    wand_ex, plan_ex = tomb_engine
+    q = Match("text", "hash join")
+    want = _top(plan_ex.search(q, k=10, fetch=False, mode="plan"))
+    assert want
+    _refuse_local_frames(monkeypatch)
+    got = _top(wand_ex.search(q, k=10, fetch=False, mode="wand"))
+    assert [d for d, _ in got] == [d for d, _ in want]
+    assert [s for _, s in got] == pytest.approx([s for _, s in want])
+
+
+def test_wand_with_deletes_job_count(tomb_engine, spark):
+    """On a tombstoned reader a warm WAND match runs at most 7 jobs, and
+    one whose terms the index does not hold at most 1 (no seed job)."""
+    from sparksearch.queries import Match
+    ex, _ = tomb_engine
+    _, total = _search_jobs(spark, ex, Match("text", "hash join"), "wand")
+    assert total <= 7
+    _, total = _search_jobs(spark, ex, Match("text", "zzqxv qqzxw"), "wand")
+    assert total <= 1
+
+
+def test_wand_k0_returns_empty(tomb_engine):
+    """k=0 returns no hits on both paths, also when the seed holds no
+    candidate (an AND query with a term the index does not hold)."""
+    from sparksearch.queries import Match
+    wand_ex, plan_ex = tomb_engine
+    q = Match("text", "hash zzqxv", operator="and")
+    assert wand_ex.search(q, k=0, mode="wand").collect() == []
+    assert plan_ex.search(q, k=0, mode="plan").collect() == []
+
+
+def test_query_literal_frames_run_no_python(engine, monkeypatch):
+    """Fuzzy match and the term suggester carry their query-side rows as
+    JVM literals, not as a DataFrame scanned from a Python list."""
+    from sparksearch.fetchops import suggest_terms
+    from sparksearch.queries import Match
+    ix, ex = engine
+    _refuse_local_frames(monkeypatch)
+    frames = {
+        "fuzzy": ex.search(Match("text", "hasj joim", fuzziness=1,
+                                 fuzzy_transpositions=False), k=10),
+        "suggest": suggest_terms(ix, "hsah"),
+    }
+    for name, df in frames.items():
+        assert df.collect(), name
+        assert "Scan ExistingRDD" not in _plan_str(df), name
+
+
 def test_fresh_reader_first_query_runs_no_schema_job(engine, spark):
     """Opening a reader reads its tables (the segment blocks too on a
     use_segments reader), so its first query runs the warm query's jobs

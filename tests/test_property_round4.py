@@ -2,7 +2,7 @@
 round-trip (PDF, WARC) or at least never crash (metaphone, icu word
 break, attachment sniff/extract)."""
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 TEXT = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400)
@@ -10,6 +10,7 @@ TEXT = st.text(
 
 @settings(max_examples=150, deadline=None)
 @given(TEXT)
+@example("ET")
 def test_pdf_roundtrip_any_text(t):
     from sparksearch.attachments import make_pdf, pdf_extract
     content, title = pdf_extract(make_pdf(t, title="T"))
