@@ -112,11 +112,21 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
                     partitions: int | None = None,
                     salt_target: int = 65536, n_chunks: int = 1) -> dict:
     """Merge away the tombstones: one consolidated generation holding only
-    live docs, with stats/n_docs/avgdl recomputed from the survivors."""
+    live docs, with stats/n_docs/avgdl recomputed from the survivors.
+
+    Refuses (ValueError, index unchanged) when the tombstones cover every
+    doc: the merged generation would hold no doc and no term statistics.
+    Tombstones only ever name live docs, so the committed counts tell
+    without a scan."""
     t0 = time.time()
     ix = IndexReader(spark, index_dir)
     if not ix.delete_files:
         return ix.meta
+    if ix.n_deleted >= ix.n_docs:
+        raise ValueError(
+            f"expunge_deletes: all {ix.n_docs} docs of {index_dir} are "
+            "deleted, so the merged generation would be empty; the index "
+            "is left unchanged (rebuild it, or add documents first)")
     new_gen = next_generation(index_dir)
     n_buckets = ix.n_buckets
 

@@ -24,9 +24,11 @@ with DFS-global statistics baked in at build time:
 Phrase queries intersect position arrays with built-in array functions
 (array_intersect over shifted positions) — no UDF.
 
-Scoring (bm25.py semantics, as Catalyst expressions):
-  idf   = ln(1 + (N - df + 0.5)/(df + 0.5))
-  score = idf * (k1+1) * tf / (tf + k1*(1 - b + b*dl_q/avgdl))
+Scoring: the BM25 kernel in bm25.py. A posting row scores
+weight_t·tfn(tf, dl_q), with weight_t = idf·(k1+1) a driver float looked
+up in a literal map and tfn the kernel's one expression tree over double
+Columns; `_combine` sums a doc's rows per query in sorted-term order, so
+the plan path, WAND, explain and oracle.py agree bit for bit.
 """
 
 from __future__ import annotations
@@ -95,25 +97,43 @@ def _term_lookup(values: dict) -> Column:
                        for x in (F.lit(t), F.lit(v))]), F.col("term"))
 
 
-def _sum_idf(n_docs: int, stats: dict, weights: dict) -> Column:
-    """Σ weight·idf over the weighted terms present in `stats` (a
-    stats_for dict), as a constant-folded literal expression: the JVM
-    evaluates the same idf arithmetic it runs per row, summed in term
-    order."""
-    total = F.lit(0.0)
-    for t in sorted(weights):
-        if t in stats:
-            df = F.lit(float(stats[t][0]))
-            idf = F.log1p((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5))
-            total = total + idf * F.lit(float(weights[t]))
-    return total
+def _bm25_scores(stats: dict, n_docs: int, avgdl: float,
+                 k1: float, b: float) -> Column:
+    """The kernel's row value weight_t·tfn(tf, dl_q) of a (term, tf, dl_q)
+    row whose term is in `stats` (a stats_for dict)."""
+    w = _term_lookup({t: bm25.weight(v[0], n_docs, k1)
+                      for t, v in stats.items()})
+    return w * bm25.tfn(F.col("tf").cast("double"),
+                        F.col("dl_q").cast("double"), float(avgdl), k1, b)
 
 
-def _tf_norm(tf: Column, dl_q: Column, avgdl: float,
-             k1: float = bm25.K1, b: float = bm25.B) -> Column:
-    tf = tf.cast("double")
-    denom = tf + k1 * (1.0 - b + b * dl_q.cast("double") / float(avgdl))
-    return F.lit(k1 + 1.0) * tf / denom
+def _combine(per: DataFrame, cnts: list[dict]) -> DataFrame:
+    """(docid, _s{j}, _n{j}) for each query term-count dict cnts[j], from
+    (docid, term, score) rows in one groupBy(docid): query j's matched
+    count _n{j} = Σ cnt_t over the doc's rows, and its score _s{j} folds
+    bm25.step over the doc's (term, score) list sorted by term — the
+    order of bm25.combine, whatever order the rows arrive in. Terms
+    outside query j step by 0·s, which adds 0.0."""
+    maps = [F.create_map(*[x for t, c in sorted(cnt.items())
+                           for x in (F.lit(t), F.lit(int(c)))])
+            for cnt in cnts]
+
+    def cnt_of(m: Column, term: Column) -> Column:
+        return F.coalesce(F.element_at(m, term), F.lit(0))
+
+    def fold(m: Column):
+        return lambda total, x: bm25.step(total, cnt_of(m, x["term"]),
+                                          x["score"])
+
+    agg = per.groupBy("docid").agg(
+        F.array_sort(F.collect_list(F.struct("term", "score"))).alias("_ts"),
+        *[F.sum(cnt_of(m, F.col("term"))).alias(f"_n{j}")
+          for j, m in enumerate(maps)])
+    return agg.select(
+        "docid",
+        *[F.aggregate("_ts", F.lit(0.0), fold(m)).alias(f"_s{j}")
+          for j, m in enumerate(maps)],
+        *[f"_n{j}" for j in range(len(maps))])
 
 
 class Executor:
@@ -239,17 +259,8 @@ class Executor:
             if infos:
                 all_terms = sorted(set().union(
                     *[set(cnt) for _, cnt, _ in infos]))
-                per = self._term_scores(all_terms, True)
-                aggs = []
-                for j, (_qid, cnt, _need) in enumerate(infos):
-                    wmap = F.create_map(*[x for t, c in cnt.items()
-                                          for x in (F.lit(t),
-                                                    F.lit(float(c)))])
-                    w = F.coalesce(F.element_at(wmap, F.col("term")),
-                                   F.lit(0.0))
-                    aggs.append(F.sum(F.col("score") * w).alias(f"_s{j}"))
-                    aggs.append(F.sum(w).alias(f"_n{j}"))
-                fused = per.groupBy("docid").agg(*aggs)
+                fused = _combine(self._term_scores(all_terms, True),
+                                 [cnt for _, cnt, _ in infos])
                 parts = [F.struct(
                     F.lit(qid).alias("query_id"),
                     F.col(f"_s{j}").alias("score"),
@@ -668,17 +679,22 @@ class Executor:
 
     def _term_scores(self, terms: list[str], scored: bool) -> DataFrame:
         """(docid, term, score) for every posting of the given terms,
-        scored by the executor's similarity (BM25 default; boolean /
-        LMDirichlet / LMJelinekMercer via the `similarity` setting).
-        The per-term df/cf columns the similarity reads are literal-map
-        lookups of the reader's stats_for dict; filter context
-        (scored=False) needs no statistics."""
+        scored by the executor's similarity: BM25 through the kernel's
+        row value, any other similarity through its score_expr over
+        literal-map df/cf columns from the reader's stats_for dict.
+        Filter context (scored=False) needs no statistics."""
+        from sparksearch.similarity import BM25Similarity
         tw = self._twindow[-1] if self._twindow else None
         if not scored:
             return (self.ix.postings_for(terms, time_window=tw)
                     .select("docid", "term", F.lit(0.0).alias("score")))
         stats = self.ix.stats_for(terms)
-        p = self.ix.postings_for(sorted(stats), time_window=tw).select(
+        p = self.ix.postings_for(sorted(stats), time_window=tw)
+        if isinstance(self.sim, BM25Similarity):
+            score = _bm25_scores(stats, self.ix.n_docs, self.ix.avgdl,
+                                 self.sim.k1, self.sim.b)
+            return p.select("docid", "term", score.alias("score"))
+        p = p.select(
             "docid", "term", "tf", "dl_q",
             _term_lookup({t: v[0] for t, v in stats.items()})
             .cast("long").alias("df"),
@@ -689,12 +705,12 @@ class Executor:
             self.ix.avgdl, int(self.ix.meta["total_tf"]))
         return p.select("docid", "term", score.alias("score"))
 
-    def _tfn_sim(self, tf: Column, dl_q: Column) -> Column:
-        """BM25 tf-normalization with the executor similarity's k1/b —
+    def _tfn(self, tf: Column, dl_q: Column) -> Column:
+        """The kernel's tfn under the executor similarity's k1/b —
         positional/expanded paths that score pseudo-terms call
         _require_bm25 first, so `self.sim` is a BM25Similarity here."""
-        return _tf_norm(tf, dl_q, self.ix.avgdl,
-                        self.sim.k1, self.sim.b)
+        return bm25.tfn(tf.cast("double"), dl_q.cast("double"),
+                        float(self.ix.avgdl), self.sim.k1, self.sim.b)
 
     def _require_bm25(self, feature: str) -> None:
         from sparksearch.similarity import BM25Similarity
@@ -720,22 +736,15 @@ class Executor:
         # in the reference → weight both score and clause count by w
         from collections import Counter
         cnt = Counter(terms)
-        uniq = sorted(cnt)
-        per = self._term_scores(uniq, scored)
-        wmap = F.create_map(*[x for t, c in cnt.items()
-                              for x in (F.lit(t), F.lit(float(c)))])
-        w = F.element_at(wmap, F.col("term"))
         if q.operator == "and":
             msm = len(terms)
         else:
             msm = calculate_min_should_match(
                 len(terms), q.minimum_should_match, has_required=False)
-        agg = (per.groupBy("docid")
-                  .agg(F.sum(F.col("score") * w).alias("score"),
-                       F.sum(w).cast("int").alias("_n")))
+        agg = _combine(self._term_scores(sorted(cnt), scored), [cnt])
         if msm > 1:
-            agg = agg.filter(F.col("_n") >= msm)
-        return agg.select("docid", "score")
+            agg = agg.filter(F.col("_n0") >= msm)
+        return agg.select("docid", F.col("_s0").alias("score"))
 
     def _plan_match_blended(self, q: Match, toks, scored: bool) -> DataFrame:
         """Match over a token stream with stacked (same-position) tokens —
@@ -747,9 +756,10 @@ class Executor:
 
         Plan shape: ONE postings scan over the union of member terms, one
         groupBy(docid) with a conditional-sum column per position group; the
-        blended idf per group is a driver-side literal from the reader's
-        cached stats_for lookup — never a corpus scan."""
-        import math
+        blended weight per group is a driver-side literal from the reader's
+        cached stats_for lookup — never a corpus scan. Groups combine like
+        terms: bm25.combine in sorted-group order, weighted by how many
+        positions hold the group."""
         from collections import Counter
 
         self._require_bm25("synonym-blended match")
@@ -764,29 +774,32 @@ class Executor:
         all_terms = sorted({t for g in groups for t in g})
         dfs = {t: v[0] for t, v in self.ix.stats_for(all_terms).items()}
 
-        def idf(df: int) -> float:
-            return math.log1p((self.ix.n_docs - df + 0.5) / (df + 0.5))
-
         p = self.ix.postings_for(all_terms) \
             .select("term", "docid", "tf", "dl_q")
-        items = list(groups.items())
+        gcol = {g: f"_g{j}" for j, g in enumerate(sorted(groups))}
         aggs = [F.max("dl_q").alias("_dlq")]
-        for j, (g, _w) in enumerate(items):
+        for g, c in gcol.items():
             aggs.append(F.sum(F.when(F.col("term").isin(list(g)),
                                      F.col("tf")).otherwise(F.lit(0)))
-                        .alias(f"_g{j}"))
+                        .alias(c))
         agg = p.groupBy("docid").agg(*aggs)
 
-        score = F.lit(0.0)
-        nmatch = F.lit(0)
-        for j, (g, w) in enumerate(items):
+        def group_score(g) -> Column:
+            # 0.0 for a doc without the group (tfn(0) is 0/0 at k1 = 0)
             bdf = max(dfs.get(t, 0) for t in g)
-            gidf = idf(bdf) if bdf > 0 else 0.0
-            gtf = F.col(f"_g{j}")
-            if scored:
-                score = score + (F.lit(float(w) * gidf)
-                                 * self._tfn_sim(gtf, F.col("_dlq")))
-            nmatch = nmatch + F.when(gtf > 0, F.lit(int(w))).otherwise(F.lit(0))
+            gw = bm25.weight(bdf, self.ix.n_docs, self.sim.k1) \
+                if bdf > 0 else 0.0
+            gtf = F.col(gcol[g])
+            return F.when(gtf > 0, F.lit(gw) * self._tfn(gtf, F.col("_dlq"))
+                          ).otherwise(F.lit(0.0))
+
+        score = F.lit(0.0)
+        if scored:
+            for g in sorted(groups):
+                score = bm25.step(score, groups[g], group_score(g))
+        nmatch = reduce(lambda a, c: a + c, [
+            F.when(F.col(c) > 0, F.lit(int(groups[g]))).otherwise(F.lit(0))
+            for g, c in gcol.items()])
         if q.operator == "and":
             msm = n_pos
         else:
@@ -945,12 +958,17 @@ class Executor:
         if not scored:
             return joined.select("docid", F.lit(0.0).alias("score"))
         self._require_bm25("phrase/span pseudo-term")
-        from collections import Counter
-        cnt = Counter(terms)
-        sum_idf = _sum_idf(self.ix.n_docs, self.ix.stats_for(list(cnt)),
-                           cnt)
-        score = sum_idf * self._tfn_sim(F.col("pf"), F.col("dl_q"))
+        score = F.lit(self._phrase_weight(terms)) \
+            * self._tfn(F.col("pf"), F.col("dl_q"))
         return joined.select("docid", score.alias("score"))
+
+    def _phrase_weight(self, terms: list[str]) -> float:
+        """The kernel's phrase weight over the member terms the index
+        holds (an absent member matches no doc)."""
+        stats = self.ix.stats_for(terms)
+        return bm25.phrase_weight(
+            [stats[t][0] for t in sorted(terms) if t in stats],
+            self.ix.n_docs, self.sim.k1)
 
     @staticmethod
     def _fuzz_of(term: str, spec) -> int:
@@ -1021,17 +1039,12 @@ class Executor:
         pairs = F.broadcast(literal_frame(
             spark, ["qt", "term"], [(r["qt"], r["term"]) for r in pair_rows]))
         perq = (per.join(pairs, "term")
-                .groupBy("docid", "qt")
+                .groupBy("docid", F.col("qt").alias("term"))
                 .agg(F.max("score").alias("score")))
-        wmap = F.create_map(*[x for t, c in cnt.items()
-                              for x in (F.lit(t), F.lit(float(c)))])
-        w = F.element_at(wmap, F.col("qt"))
-        agg = (perq.groupBy("docid")
-               .agg(F.sum(F.col("score") * w).alias("score"),
-                    F.sum(w).cast("int").alias("_n")))
+        agg = _combine(perq, [cnt])
         if msm > 1:
-            agg = agg.filter(F.col("_n") >= msm)
-        return agg.select("docid", "score")
+            agg = agg.filter(F.col("_n0") >= msm)
+        return agg.select("docid", F.col("_s0").alias("score"))
 
     def _plan_phrase_prefix(self, q: MatchPhrasePrefix,
                             scored: bool) -> DataFrame:
@@ -1496,13 +1509,11 @@ class Executor:
         terms = sorted(set(q.values))
         if not terms:
             return self._empty()
-        per = self._term_scores(terms, scored)
-        out = (per.groupBy("docid")
-               .agg(F.sum("score").alias("score"),
-                    F.countDistinct("term").alias("_nt")))
+        out = _combine(self._term_scores(terms, scored),
+                       [dict.fromkeys(terms, 1)])
         if q.required > 1:
-            out = out.filter(F.col("_nt") >= int(q.required))
-        return out.select("docid", "score")
+            out = out.filter(F.col("_n0") >= int(q.required))
+        return out.select("docid", F.col("_s0").alias("score"))
 
     def _function_col(self, fn) -> Column:
         if isinstance(fn, WeightFunction):
@@ -1816,13 +1827,15 @@ class Executor:
         # postings scans + stats joins + (k-1) docid joins. Instead: scan
         # postings_for(union of all clause terms) once, score per
         # (docid, term), and derive every clause's matched-count and score
-        # in a single groupBy(docid) with per-clause term-weight maps —
-        # one scan, one shuffle, regardless of clause count.
+        # from a single groupBy(docid) with one column per term
+        # (_combine) — one scan, one shuffle, regardless of clause count.
         fm = [c for c in must if self._fusable(c)]
         fs = [c for c in should if self._fusable(c)]
         fn = [c for c in must_not if self._fusable(c)]
         work = None  # (docid, _f_ms, _f_mok, _f_os, _f_on, _f_neg) — ONE scan
         infos_m: list = []
+        infos_s: list = []
+        infos_n: list = []
         if len(fm) + len(fs) + len(fn) >= 2:
             infos_m = [self._match_clause_info(c) for c in fm]
             if any(not cnt for cnt, _ in infos_m):
@@ -1831,54 +1844,36 @@ class Executor:
                        if x[0]]
             infos_n = [x for x in (self._match_clause_info(c) for c in fn)
                        if x[0]]
-            if not (infos_m or infos_s or infos_n):
-                # every fusable clause analyzed to zero terms (e.g. all
-                # stopwords) — nothing to fuse; fall through to the
-                # unfused path (an empty agg() would throw)
-                return self._plan_bool_unfused(q, scored)
-            all_terms = sorted(set().union(
-                *[set(cnt) for cnt, _ in infos_m + infos_s + infos_n]))
-            per = self._term_scores(all_terms, scored)
-
-            def clause_exprs(infos, prefix):
-                exprs = []
-                for j, (cnt, _need) in enumerate(infos):
-                    wmap = F.create_map(*[x for t, c_ in cnt.items()
-                                          for x in (F.lit(t),
-                                                    F.lit(float(c_)))])
-                    w = F.coalesce(F.element_at(wmap, F.col("term")),
-                                   F.lit(0.0))
-                    exprs.append(F.sum(F.col("score") * w)
-                                 .alias(f"_{prefix}s{j}"))
-                    exprs.append(F.sum(w).alias(f"_{prefix}n{j}"))
-                return exprs
-
-            aggs = (clause_exprs(infos_m, "m") + clause_exprs(infos_s, "o")
-                    + clause_exprs(infos_n, "x"))
-            fused = per.groupBy("docid").agg(*aggs)
-            # derive every clause-combination column in one projection so
-            # the scan+shuffle behind `fused` appears exactly once in the
+        # every fusable clause analyzing to zero terms (e.g. all
+        # stopwords) leaves nothing to fuse: plan the clauses unfused
+        if infos_m or infos_s or infos_n:
+            infos = infos_m + infos_s + infos_n
+            all_terms = sorted(set().union(*[cnt for cnt, _ in infos]))
+            fused = _combine(self._term_scores(all_terms, scored),
+                             [cnt for cnt, _ in infos])
+            # clause i of `infos` is _s{i} / _n{i}; derive every
+            # clause-combination column in one projection so the
+            # scan+shuffle behind `fused` appears exactly once in the
             # final plan (Spark does not dedupe repeated subplans)
-            mok = (reduce(lambda a, b: a & b,
-                          [F.col(f"_mn{j}") >= float(need)
-                           for j, (_, need) in enumerate(infos_m)])
+            ok = [F.col(f"_n{i}") >= float(need)
+                  for i, (_, need) in enumerate(infos)]
+            m_ix = range(len(infos_m))
+            s_ix = range(len(infos_m), len(infos_m) + len(infos_s))
+            n_ix = range(len(infos_m) + len(infos_s), len(infos))
+            mok = (reduce(lambda a, b: a & b, [ok[i] for i in m_ix])
                    if infos_m else F.lit(True))
             ms = (reduce(lambda a, b: a + b,
-                         [F.col(f"_ms{j}") for j in range(len(infos_m))])
+                         [F.col(f"_s{i}") for i in m_ix])
                   if infos_m and scored else F.lit(0.0))
             if infos_s:
                 os_ = reduce(lambda a, b: a + b,
-                             [F.when(F.col(f"_on{j}") >= float(need),
-                                     F.col(f"_os{j}")).otherwise(F.lit(0.0))
-                              for j, (_, need) in enumerate(infos_s)])
+                             [F.when(ok[i], F.col(f"_s{i}"))
+                              .otherwise(F.lit(0.0)) for i in s_ix])
                 on_ = reduce(lambda a, b: a + b,
-                             [(F.col(f"_on{j}") >= float(need)).cast("int")
-                              for j, (_, need) in enumerate(infos_s)])
+                             [ok[i].cast("int") for i in s_ix])
             else:
                 os_, on_ = F.lit(0.0), F.lit(0)
-            neg = (reduce(lambda a, b: a | b,
-                          [F.col(f"_xn{j}") >= float(need)
-                           for j, (_, need) in enumerate(infos_n)])
+            neg = (reduce(lambda a, b: a | b, [ok[i] for i in n_ix])
                    if infos_n else F.lit(False))
             work = fused.select(
                 "docid", ms.alias("_f_ms"), mok.alias("_f_mok"),

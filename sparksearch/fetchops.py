@@ -489,31 +489,33 @@ def _explain_match(ex, q, docids: list) -> DataFrame:
 def _explain_terms(ex, weights: dict, docids: list) -> DataFrame:
     """Core per-term breakdown shared by match / term / bool clauses:
     `weights` maps term → clause weight (duplicate-occurrence count for
-    match)."""
+    match). Each row is the kernel's row value under the executor's BM25
+    (k1, b): idf as bm25.py defines it, tfn = (k1+1)·bm25.tfn, and
+    contribution = weight·(idf·(k1+1))·bm25.tfn, so a doc's contributions
+    sum to its hit score up to the 6-decimal rounding."""
     from sparksearch import bm25
-    from sparksearch.exec import _term_lookup
+    from sparksearch.exec import _bm25_scores, _term_lookup
+    ex._require_bm25("explain")
     ix = ex.ix
-    cnt = weights
     ids = [int(d) for d in docids]
-    stats = ix.stats_for(list(cnt))
-    df = _term_lookup({t: v[0] for t, v in stats.items()}).cast("long")
+    stats = ix.stats_for(list(weights))
     p = (ix.postings_for(sorted(stats))
-         .filter(F.col("docid").isin(ids))
-         .select("docid", "term", "tf", "dl_q", df.alias("df")))
-    w = F.create_map(*[x for t, c in cnt.items()
-                       for x in (F.lit(t), F.lit(float(c)))])
-    idf = F.log(F.lit(1.0) + (F.lit(float(ix.n_docs)) - F.col("df") + 0.5)
-                / (F.col("df") + 0.5))
-    tfn = (F.lit(bm25.K1 + 1.0) * F.col("tf")
-           / (F.col("tf") + F.lit(bm25.K1)
-              * (1.0 - bm25.B + bm25.B * F.col("dl_q") / F.lit(ix.avgdl))))
+         .filter(F.col("docid").isin(ids)))
+    w = _term_lookup({t: float(c) for t, c in weights.items()})
+    idf = _term_lookup({t: bm25.idf(v[0], ix.n_docs)
+                        for t, v in stats.items()})
+    k1, b = ex.sim.k1, ex.sim.b
+    tfn = bm25.tfn(F.col("tf").cast("double"), F.col("dl_q").cast("double"),
+                   float(ix.avgdl), k1, b)
     return (p.select("docid", "term",
                     F.col("tf").cast("long").alias("tf"),
-                    F.col("df").cast("long").alias("df"),
+                    _term_lookup({t: v[0] for t, v in stats.items()})
+                    .cast("long").alias("df"),
                     F.round(idf, 6).alias("idf"),
-                    F.round(tfn, 6).alias("tfn"),
-                    F.element_at(w, F.col("term")).alias("weight"),
-                    F.round(F.element_at(w, F.col("term")) * idf * tfn, 6)
+                    F.round(F.lit(k1 + 1.0) * tfn, 6).alias("tfn"),
+                    w.alias("weight"),
+                    F.round(w * _bm25_scores(stats, ix.n_docs, ix.avgdl,
+                                             k1, b), 6)
                     .alias("contribution"))
             .orderBy("docid", "term"))
 
@@ -523,10 +525,9 @@ def _explain_phrase(ex, q, docids: list, weight: float = 1.0) -> DataFrame:
     term = the phrase text, tf = (sloppy) phrase frequency (double),
     df = NULL, idf = Σ member idfs — Lucene PhraseWeight.explain's
     "phraseFreq" / "idf, sum of" breakdown, flattened."""
-    from collections import Counter
-
+    from sparksearch import bm25
     from sparksearch.analysis import analyze
-    from sparksearch.exec import _sum_idf
+    ex._require_bm25("explain")
     ix = ex.ix
     ptoks = analyze(q.text, q.analyzer or ix.search_analyzer)
     terms = [t for t, _ in ptoks]
@@ -544,19 +545,21 @@ def _explain_phrase(ex, q, docids: list, weight: float = 1.0) -> DataFrame:
     joined = (ex._phrase_freq_sloppy(terms, q.slop) if q.slop > 0
               else ex._phrase_freq_exact(terms)) \
         .filter(F.col("docid").isin(ids))
-    cnt = Counter(terms)
-    sum_idf = _sum_idf(ix.n_docs, ix.stats_for(list(cnt)), cnt) \
-        .alias("sum_idf")
-    tfn = ex._tfn_sim(F.col("pf"), F.col("dl_q"))
-    return (joined.withColumn("sum_idf", sum_idf)
+    stats = ix.stats_for(terms)
+    sum_idf = sum(bm25.idf(stats[t][0], ix.n_docs)
+                  for t in sorted(terms) if t in stats)
+    tfn = ex._tfn(F.col("pf"), F.col("dl_q"))
+    return (joined
             .select("docid",
                     F.lit(q.text).alias("term"),
                     F.col("pf").cast("double").alias("tf"),
                     F.lit(None).cast("long").alias("df"),
-                    F.round("sum_idf", 6).alias("idf"),
-                    F.round(tfn, 6).alias("tfn"),
+                    F.round(F.lit(sum_idf), 6).alias("idf"),
+                    F.round(F.lit(ex.sim.k1 + 1.0) * tfn, 6)
+                    .alias("tfn"),
                     F.lit(float(weight)).alias("weight"),
-                    F.round(F.col("sum_idf") * tfn * F.lit(float(weight)),
+                    F.round(F.lit(float(weight))
+                            * (F.lit(ex._phrase_weight(terms)) * tfn),
                             6).alias("contribution"))
             .orderBy("docid"))
 

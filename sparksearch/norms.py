@@ -20,21 +20,17 @@ Decoding:
   bits = byte & 0x07 ; shift = (byte >> 3) - 1
   i = bits if shift == -1 else (bits | 0x08) << shift
 
-Everything here is NumPy-vectorized; a 256-entry decode LUT makes
-byte→length O(1) per element.
+The engine quantizes in Catalyst (`quantized_dl_sql`); the scalar
+functions are its reference and the oracle's quantizer.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 __all__ = [
     "int_to_byte4",
     "byte4_to_int",
     "quantize_length",
-    "int_to_byte4_np",
-    "quantize_length_np",
-    "DECODE_LUT",
+    "quantized_dl_sql",
 ]
 
 
@@ -61,34 +57,9 @@ def byte4_to_int(b: int) -> int:
     return (bits | 0x08) << shift
 
 
-#: 256-entry decode table: DECODE_LUT[byte] = quantized length.
-DECODE_LUT = np.array([byte4_to_int(b) for b in range(256)], dtype=np.int64)
-
-
 def quantize_length(i: int) -> int:
     """decode(encode(i)) — the document length the scorer actually sees."""
     return byte4_to_int(int_to_byte4(i))
-
-
-def int_to_byte4_np(arr: np.ndarray) -> np.ndarray:
-    """Vectorized int_to_byte4 over an int array."""
-    arr = np.asarray(arr, dtype=np.int64)
-    # bit_length via log2 is unsafe at boundaries; use frexp-free integer math.
-    num_bits = np.zeros_like(arr)
-    tmp = arr.copy()
-    while np.any(tmp > 0):
-        mask = tmp > 0
-        num_bits[mask] += 1
-        tmp = tmp >> 1
-    small = num_bits < 4
-    shift = np.where(small, 0, num_bits - 4)
-    encoded = np.where(small, arr, ((arr >> shift) & 0x07) | ((shift + 1) << 3))
-    return (encoded & 0xFF).astype(np.int64)
-
-
-def quantize_length_np(arr: np.ndarray) -> np.ndarray:
-    """Vectorized decode(encode(length)) via the 256-entry LUT."""
-    return DECODE_LUT[int_to_byte4_np(arr)]
 
 
 def quantized_dl_sql(dl: str) -> str:

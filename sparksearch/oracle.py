@@ -4,7 +4,8 @@ Implements the exact analyze → index → BM25 top-k semantics the Spark engine
 must reproduce (SURVEY.md §5): same analyzer, same SmallFloat-quantized doc
 lengths, same global statistics (DFS semantics), same Lucene scoring
 (bm25.py), same tie-break (score desc, docid asc). Every Spark query result
-is asserted rank-identical (docids) and score-equal (rtol 1e-6) against this.
+is asserted rank-identical (docids) against this, and match / exact-phrase
+scores are == (both sides score with the bm25.py kernel).
 
 Scoring semantics implemented (matching Lucene BooleanQuery/PhraseQuery as
 configured by the reference):
@@ -24,6 +25,7 @@ configured by the reference):
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
 from sparksearch import bm25
@@ -82,11 +84,9 @@ class OracleIndex:
         plist = self.postings.get(term)
         if not plist:
             return {}
-        df = len(plist)
-        return {
-            d: bm25.bm25_term_score(p.tf, df, self.n_docs, self.dl_q[d], self.avgdl)
-            for d, p in plist.items()
-        }
+        w = bm25.weight(len(plist), self.n_docs)
+        return {d: w * bm25.tfn(float(p.tf), self.dl_q[d], self.avgdl)
+                for d, p in plist.items()}
 
     def _phrase_freq(self, terms: list[str], docid: int) -> int:
         """Exact (slop 0) phrase frequency using positions."""
@@ -134,35 +134,36 @@ class OracleIndex:
             terms = [t for t, _ in analyze(q.text, q.analyzer or self.analyzer)]
             if not terms:
                 return {}  # zero_terms_query NONE
-            per_term = [self._term_scores(t) for t in terms]
             if q.operator == "and":
                 msm = len(terms)
             else:
                 msm = calculate_min_should_match(
                     len(terms), q.minimum_should_match, has_required=False)
-            acc: dict[int, float] = {}
-            cnt: dict[int, int] = {}
-            for ts in per_term:
-                for d, s in ts.items():
-                    acc[d] = acc.get(d, 0.0) + (s if scored else 0.0)
-                    cnt[d] = cnt.get(d, 0) + 1
-            return {d: s for d, s in acc.items() if cnt[d] >= msm}
+            qcnt = Counter(terms)
+            per_doc: dict[int, dict[str, float]] = {}
+            for t in qcnt:
+                for d, s in self._term_scores(t).items():
+                    per_doc.setdefault(d, {})[t] = s
+            return {d: bm25.combine(qcnt, ts) if scored else 0.0
+                    for d, ts in per_doc.items()
+                    if sum(qcnt[t] for t in ts) >= msm}
         if isinstance(q, MatchPhrase):
             terms = [t for t, _ in analyze(q.text, q.analyzer or self.analyzer)]
             if not terms:
                 return {}
             if len(terms) == 1:
                 return self._eval(Match(q.field_name, q.text, analyzer=q.analyzer), scored)
-            sum_idf = sum(bm25.idf(self.df(t), self.n_docs) for t in terms)
+            w = bm25.phrase_weight([self.df(t) for t in sorted(terms)],
+                                   self.n_docs)
             out = {}
             cand = self.postings.get(terms[0], {})
             for d in cand:
                 pf = (self._phrase_freq(terms, d) if q.slop == 0
                       else self._sloppy_freq(terms, d, q.slop))
                 if pf > 0:
-                    k1, b = bm25.K1, bm25.B
-                    tfn = pf / (pf + k1 * (1 - b + b * self.dl_q[d] / self.avgdl))
-                    out[d] = sum_idf * (k1 + 1.0) * tfn if scored else 0.0
+                    out[d] = (w * bm25.tfn(float(pf), self.dl_q[d],
+                                           self.avgdl)
+                              if scored else 0.0)
             return out
         if isinstance(q, (Term, Terms, Range, Exists, Prefix, Ids)):
             return self._eval_filter(q)

@@ -17,9 +17,10 @@ similarities that cover real usage:
 - **LMJelinekMercer(lambda=0.1)** — Lucene LMJelinekMercerSimilarity:
   ``max(0, log(1 + ((1-λ)·tf/dl) / (λ·p)))``.
 
-All formulas are Catalyst column expressions over the per-posting row
-(tf, dl_q) joined with the broadcast per-term stats (df, cf) — the same
-single-scan plan shape as the default BM25 path. ``dl_q`` is the
+All non-BM25 formulas are Catalyst column expressions over the
+per-posting row (tf, dl_q) and literal-map per-term stats (df, cf) — the
+same single-scan plan shape as the BM25 path, which scores with the
+bm25.py kernel instead. ``dl_q`` is the
 SmallFloat-quantized doc length, exactly the decoded norm Lucene feeds its
 similarities.
 
@@ -71,8 +72,10 @@ class Similarity:
 @dataclass(frozen=True)
 class BM25Similarity(Similarity):
     """BM25(k1, b). Like Lucene's BM25Similarity, rejects k1 < 0 and b
-    outside [0, 1]: WAND's block bounds rely on tf/(tf+k1·(1-b+b·dl/avgdl))
-    rising in tf and falling in dl, which only holds in that range."""
+    outside [0, 1]: WAND's block bounds rely on bm25.tfn rising in tf and
+    falling in dl, which only holds in that range. It has no score_expr:
+    every BM25 path scores with the bm25.py kernel, whose idf runs on the
+    driver (exec._bm25_scores)."""
     k1: float = bm25.K1
     b: float = bm25.B
 
@@ -83,14 +86,6 @@ class BM25Similarity(Similarity):
         if not 0 <= self.b <= 1:
             raise ValueError(f"illegal b value: {self.b}, must be between "
                              "0 and 1")
-
-    def score_expr(self, tf, dl_q, n_docs, avgdl, total_tf):
-        df = F.col("df").cast("double")
-        idf = F.log1p((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5))
-        t = tf.cast("double")
-        denom = t + self.k1 * (1.0 - self.b
-                               + self.b * dl_q.cast("double") / float(avgdl))
-        return idf * F.lit(self.k1 + 1.0) * t / denom
 
     @property
     def is_default_bm25(self) -> bool:

@@ -14,7 +14,7 @@ guarantee (provably identical top-k):
       Partial sums under-estimate true scores, so θ is a valid lower
       bound of the true k-th score.
   phase B (prune + score): a block of term t can contain a top-k doc only
-      if  ub(B) = w_t·idf_t·max_tfn(B) + Σ_{t'≠t} w_t'·idf_t'·gmax_t' ≥ θ.
+      if  ub(B) = w_t·max_tfn(B) + Σ_{t'≠t} w_t'·gmax_t' ≥ θ.
       Every doc of a pruned block has true score ≤ ub(B) < θ ≤ true k-th
       score, so pruning is exact; and any true top-k doc (including k-th
       ties) sits only in surviving blocks, so its score and its
@@ -29,8 +29,10 @@ the ≤ j·|terms|·BLOCK_SIZE postings of its seed blocks, decoded with
 segments.decode_blocks and stripped of tombstoned docs in the same plan
 (the collector-side liveDocs check), and scores them on the driver;
 phase B decodes the surviving blocks the same way and scores them with a
-Catalyst expression, summed by groupBy(docid) — no Python worker runs in
-either phase, with or without deletes.
+Catalyst expression, combined per doc by exec._combine — no Python worker
+runs in either phase, with or without deletes. Both phases score with the
+bm25.py kernel, so θ and every returned score equal the plan path's bit
+for bit.
 """
 
 from __future__ import annotations
@@ -43,6 +45,7 @@ from pyspark.sql import functions as F
 
 from sparksearch import bm25
 from sparksearch.analysis import analyze
+from sparksearch.exec import _bm25_scores, _combine, _term_lookup
 from sparksearch.queries import Match, calculate_min_should_match
 from sparksearch.segments import BLOCK_SIZE, decode_blocks
 
@@ -61,7 +64,7 @@ def wand_topk(ix, q: Match, k: int = 10,
     ``k1``/``b`` tune the BM25 parameters (default: the reference
     defaults 1.2/0.75). The stored impact pairs are raw per-block
     (max_tf, min_dlq) STATISTICS, not precomputed scores, and
-    tf/(tf+k1·(1−b+b·dl/avgdl)) is monotone up in tf / down in dl for
+    bm25.tfn is monotone up in tf / down in dl for
     any k1>0, 0≤b≤1 — so the same pairs yield exact upper bounds under
     any parameterization and pruning stays rank-exact.
     """
@@ -96,10 +99,10 @@ def wand_topk(ix, q: Match, k: int = 10,
     present = [t for t in uniq if t in stats]
     if not present:
         return ix.docs.select("docid", F.lit(0.0).alias("score")).limit(0)
-    # (k1+1) folded into the per-term weight: decode emits plain
-    # tf/(tf+k1·norm), so score = w·idf·(k1+1)·tfn = LegacyBM25Similarity
-    widf = {t: cnt[t] * bm25.idf(stats[t][0], ix.n_docs) * (k1 + 1.0)
-            for t in present}
+    # the kernel's per-term weight idf·(k1+1); a doc's score is
+    # bm25.combine over cnt·weight·tfn, exactly as on the plan path
+    wt = {t: bm25.weight(stats[t][0], ix.n_docs, k1) for t in present}
+    avgdl = float(ix.avgdl)
 
     # buckets are pure-Python xxhash64 (no job)
     blocks = ix.segments.blocks_for(present, ix._buckets_of(present))
@@ -107,16 +110,9 @@ def wand_topk(ix, q: Match, k: int = 10,
     # CURRENT global avgdl — tfn is monotone up in tf, down in dl, so this
     # dominates every doc in the block even after avgdl drifted across
     # generations
-
-    def _tfn_bound(max_tf: float, min_dlq: float) -> float:
-        return max_tf / (max_tf + k1 * (1.0 - b + b * min_dlq / ix.avgdl))
-
-    tfn_ub = (F.col("max_tf").cast("double")
-              / (F.col("max_tf")
-                 + F.lit(k1) * (1.0 - b
-                                + b * F.col("min_dlq").cast("double")
-                                / float(ix.avgdl))))
-    blocks = blocks.withColumn("_tfn_ub", tfn_ub)
+    blocks = blocks.withColumn("_tfn_ub", bm25.tfn(
+        F.col("max_tf").cast("double"), F.col("min_dlq").cast("double"),
+        avgdl, k1, b))
 
     # phase A seed: the j highest-impact blocks per term, decoded and
     # stripped of tombstoned docs in one JVM-only plan. Only their
@@ -132,60 +128,44 @@ def wand_topk(ix, q: Match, k: int = 10,
         .filter(F.col("_rn") <= j))) \
         .select("term", "docid", "tf", "dl_q").collect()
 
-    # per-term global bound gmax: from the term-level (max_tf, min_dlq)
-    # impact pair in the stats table — zero extra jobs.
-    # tfn_ub(max over blocks max_tf, min over blocks min_dlq) ≥
-    # max over blocks tfn_ub(block) ≥ any doc's tfn, so pruning stays
-    # exact (marginally looser than the per-block max).
-    gm = {t: _tfn_bound(float(v[2]), float(v[3])) for t, v in stats.items()}
-    sum_all = sum(widf[t] * gm[t] for t in present)
-
-    # msm is counted over the analyzed token list INCLUDING duplicates (an
-    # operator='and' query with a repeated term needs msm = len(terms)), so
-    # clause-match counts must be weighted by the term's multiplicity cnt[t]
-    # — mirroring exec._plan_match; countDistinct(term) caps at len(uniq)
-    # and would make repeated-term AND queries unsatisfiable.
-    cnt_map = F.create_map(*[x for t in present
-                             for x in (F.lit(t), F.lit(int(cnt[t])))])
-    widf_map = F.create_map(*[x for t in present
-                              for x in (F.lit(t), F.lit(widf[t]))])
-
-    def agg_scores(df: DataFrame) -> DataFrame:
-        # w·idf·tf/(tf + k1·((1−b) + b·dl_q/avgdl)), in the operation order
-        # of the driver-side phase-A scoring below
-        tf = F.col("tf").cast("double")
-        norm = F.lit(1.0 - b) + F.lit(b) * F.col("dl_q").cast("double") \
-            / F.lit(float(ix.avgdl))
-        tfn = tf / (tf + F.lit(k1) * norm)
-        out = (decode_blocks(df)
-               .groupBy("docid")
-               .agg(F.sum(F.element_at(widf_map, F.col("term")) * tfn)
-                    .alias("score"),
-                    F.sum(F.element_at(cnt_map, F.col("term")))
-                     .alias("_nt")))
-        if msm > 1:
-            out = out.filter(F.col("_nt") >= msm)
-        return out.select("docid", "score")
-
-    # phase A scoring, driver-local over the collected live seed postings
-    acc_s: dict[int, float] = {}
-    acc_n: dict[int, int] = {}
+    # phase A scoring, driver-local, with the kernel: a seed doc's partial
+    # score skips each term whose posting fell outside the seed, so it
+    # never exceeds the doc's true score (rounding is monotone)
+    seen: dict[int, dict[str, float]] = {}
     for term, d, tf, dl_q in seed_rows:
-        tfn = tf / (tf + k1 * (1.0 - b + b * dl_q / ix.avgdl))
-        acc_s[d] = acc_s.get(d, 0.0) + widf[term] * tfn
-        acc_n[d] = acc_n.get(d, 0) + cnt[term]
-    cand = sorted((s for d, s in acc_s.items()
-                   if msm <= 1 or acc_n[d] >= msm), reverse=True)
+        seen.setdefault(d, {})[term] = wt[term] * bm25.tfn(
+            float(tf), float(dl_q), avgdl, k1, b)
+    cand = sorted((bm25.combine(cnt, s) for s in seen.values()
+                   if msm <= 1 or sum(cnt[t] for t in s) >= msm),
+                  reverse=True)
     theta = cand[k - 1] if len(cand) >= k else 0.0
 
     # phase B: prune blocks whose best-possible doc can't reach θ, then
-    # score the survivors exactly
-    gmax_other = {t: sum_all - widf[t] * gm[t] for t in present}
-    ub_other = F.create_map(*[x for t in present
-                              for x in (F.lit(t), F.lit(gmax_other[t]))])
+    # score the survivors exactly. A block of term t bounds its docs by
+    # w_t·tfn_ub + Σ_{t'≠t} w_t'·gm_t' (w = cnt·weight; gm = the
+    # term-level bound from the stats table's (max_tf, min_dlq) pair, ≥
+    # every block's tfn_ub — zero extra jobs). A sum of positive terms in
+    # another operation order than bm25.combine, the bound can round a
+    # few ULP (≤ ~2·|terms|) below a doc that attains it, so it is
+    # compared against θ with a relative margin: pruning less is always
+    # exact.
+    w = {t: cnt[t] * wt[t] for t in present}
+    gm = {t: bm25.tfn(float(v[2]), float(v[3]), avgdl, k1, b)
+          for t, v in stats.items()}
+    w_map = _term_lookup(w)
+    ub_other = _term_lookup({t: sum((w[u] * gm[u] for u in present
+                                     if u != t), 0.0) for t in present})
     survivors = blocks.filter(
-        F.element_at(widf_map, F.col("term")) * F.col("_tfn_ub")
-        + F.element_at(ub_other, F.col("term")) >= F.lit(theta))
-    return (ix.live(agg_scores(survivors))
+        w_map * F.col("_tfn_ub") + ub_other >= F.lit(theta * (1.0 - 1e-12)))
+    per = decode_blocks(survivors).select(
+        "docid", "term", _bm25_scores(stats, ix.n_docs, avgdl, k1, b)
+        .alias("score"))
+    # msm counts the analyzed tokens INCLUDING duplicates (an
+    # operator='and' query with a repeated term needs msm = len(terms)),
+    # which _combine's cnt-weighted match count does
+    out = _combine(per, [cnt])
+    if msm > 1:
+        out = out.filter(F.col("_n0") >= msm)
+    return (ix.live(out.select("docid", F.col("_s0").alias("score")))
             .orderBy(F.col("score").desc(), F.col("docid").asc())
             .limit(k))

@@ -25,7 +25,7 @@ def _queries():
 
 def _url_scores(ex, q, k=10, mode="plan", drop_boundary_ties=False):
     rows = ex.search(q, k=k, fetch=True, mode=mode).collect()
-    pairs = sorted((r["url"], round(r["score"], 9)) for r in rows)
+    pairs = sorted((r["url"], r["score"]) for r in rows)
     if drop_boundary_ties and pairs:
         # docid tie-break order differs between batch-ordered (incremental)
         # and global-url-ordered (single-shot) builds, exactly as it does
@@ -197,8 +197,9 @@ def test_add_after_merge_keeps_every_generation(spark, tmp_path):
     number no docs/postings or segment generation has held, so an add
     after a merge never rebuilds over the merged segment generation. The
     segments then hold every posting (Σ postings == Σdf), cover every
-    committed generation, and WAND equals the row-postings plan; the same
-    holds after expunge_deletes, which leaves one segment generation."""
+    committed generation, and WAND equals the row-postings plan, scores
+    included, under default and tuned BM25; the same holds with deletes
+    and after expunge_deletes, which leaves one segment generation."""
     from sparksearch.build import build_index
     from sparksearch.corpus import synthesize_pages
     from sparksearch.deletes import delete_by_query, expunge_deletes
@@ -208,6 +209,7 @@ def test_add_after_merge_keeps_every_generation(spark, tmp_path):
     from sparksearch.queries import Match
     from sparksearch.segments import (SegmentsReader, build_segments,
                                       decode_blocks)
+    from sparksearch.similarity import BM25Similarity
 
     out = str(tmp_path / "addmerge")
     pages = synthesize_pages(spark, 300, seed=3, vocab=60, min_len=5,
@@ -228,15 +230,17 @@ def test_add_after_merge_keeps_every_generation(spark, tmp_path):
         sum_df = ix.stats.agg(F.sum("df")).first()[0]
         assert decode_blocks(SegmentsReader(spark, out).blocks).count() \
             == sum_df
-        ex = Executor(ix)
-        for text in ("w1", "w2 w7", "w3 w11 w20"):
-            q = Match("text", text)
-            want = _url_scores(ex, q, 10, "plan")
-            assert len(want) == 10
-            assert _url_scores(ex, q, 10, "wand") == want, text
+        for sim in (BM25Similarity(), BM25Similarity(k1=0.9, b=0.4)):
+            ex = Executor(ix, similarity=sim)
+            for text in ("w1", "w2 w7", "w3 w11 w20"):
+                q = Match("text", text)
+                want = _url_scores(ex, q, 10, "plan")
+                assert len(want) == 10
+                assert _url_scores(ex, q, 10, "wand") == want, (sim, text)
 
     check()
     assert delete_by_query(spark, out, Match("text", "w30")) > 0
+    check()
     expunge_deletes(spark, out, partitions=4, salt_target=64)
     check()
 

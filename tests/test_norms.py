@@ -1,13 +1,8 @@
 """SmallFloat norm quantization (FIXTURES.md §6)."""
 
-import numpy as np
-import pytest
 from hypothesis import given, strategies as st
 
-from sparksearch.norms import (
-    byte4_to_int, int_to_byte4, int_to_byte4_np, quantize_length,
-    quantize_length_np,
-)
+from sparksearch.norms import byte4_to_int, int_to_byte4, quantize_length
 
 
 def test_small_values_exact():
@@ -34,15 +29,6 @@ def test_monotone_and_idempotent(i):
     assert q <= i
     assert quantize_length(q) == q            # idempotent on decoded values
     assert quantize_length(i + 1) >= q        # monotone
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**30), min_size=1, max_size=200))
-def test_np_matches_scalar(xs):
-    arr = np.array(xs, dtype=np.int64)
-    np.testing.assert_array_equal(
-        int_to_byte4_np(arr), np.array([int_to_byte4(x) for x in xs]))
-    np.testing.assert_array_equal(
-        quantize_length_np(arr), np.array([quantize_length(x) for x in xs]))
 
 
 def test_byte_roundtrip_all_256():

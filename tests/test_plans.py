@@ -71,7 +71,9 @@ def test_scoring_is_whole_stage_codegen(engine):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "MapInPandas" not in plan
-    assert "partial_sum" in plan  # map-side combine before the exchange
+    # map-side combine before the exchange: each doc's (term, score)
+    # list, which exec._combine folds in sorted-term order
+    assert "partial_collect_list" in plan
 
 
 def test_docvalue_filter_pushdown(engine):
@@ -193,8 +195,7 @@ def test_wand_with_deletes_builds_no_local_frame(tomb_engine, monkeypatch):
     assert want
     _refuse_local_frames(monkeypatch)
     got = _top(wand_ex.search(q, k=10, fetch=False, mode="wand"))
-    assert [d for d, _ in got] == [d for d, _ in want]
-    assert [s for _, s in got] == pytest.approx([s for _, s in want])
+    assert got == want
 
 
 def test_wand_with_deletes_job_count(tomb_engine, spark):
@@ -216,6 +217,19 @@ def test_wand_k0_returns_empty(tomb_engine):
     q = Match("text", "hash zzqxv", operator="and")
     assert wand_ex.search(q, k=0, mode="wand").collect() == []
     assert plan_ex.search(q, k=0, mode="plan").collect() == []
+
+
+def test_bm25_plans_run_no_logarithm(tomb_engine):
+    """BM25 idf is a driver float (bm25.py kernel): the optimized plans of
+    a plan-path match and a WAND match hold no logarithm, whose JVM
+    rounding differs from the driver's."""
+    from sparksearch.queries import Match
+    wand_ex, plan_ex = tomb_engine
+    q = Match("text", "hash join")
+    for df in (plan_ex.search(q, k=10, mode="plan"),
+               wand_ex.search(q, k=10, mode="wand")):
+        opt = _optimized_str(df).upper()
+        assert "LOG1P" not in opt and "LOG(" not in opt, opt
 
 
 def test_query_literal_frames_run_no_python(engine, monkeypatch):

@@ -6,34 +6,25 @@ minimum_should_match arithmetic against generated inputs instead of fixed
 goldens). The posting-block round trip is a seeded Spark test in
 tests/test_segments.py."""
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from sparksearch.norms import (
-    DECODE_LUT,
-    byte4_to_int,
-    int_to_byte4,
-    int_to_byte4_np,
-    quantize_length,
-)
+from sparksearch.norms import byte4_to_int, int_to_byte4, quantize_length
 
 
 @settings(max_examples=300, deadline=None)
 @given(st.integers(min_value=1, max_value=2**30))
 def test_norms_quantization_properties(dl):
     """SmallFloat byte4: decode(encode(x)) <= x (never inflates a doc
-    length), monotone non-decreasing, exact for the 4-bit range (≤ 16),
-    and the numpy batch path agrees with the scalar path."""
+    length), monotone non-decreasing, and exact for the 4-bit range
+    (≤ 16)."""
     b = int_to_byte4(dl)
     q = byte4_to_int(b)
     assert 0 <= b <= 255
     assert q <= dl
     assert q == quantize_length(dl)
-    assert DECODE_LUT[b] == q
     if dl <= 16:
         assert q == dl
-    assert int_to_byte4_np(np.array([dl], dtype=np.int64))[0] == b
     b2 = int_to_byte4(dl + 1)
     assert b2 >= b
 

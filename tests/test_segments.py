@@ -220,7 +220,7 @@ def seg_index(spark, tmp_path_factory):
 
 def _topk(ex, q, k, mode):
     rows = ex.search(q, k=k, fetch=False, mode=mode).collect()
-    return [(r["docid"], round(r["score"], 9)) for r in rows]
+    return [(r["docid"], r["score"]) for r in rows]
 
 
 def _queries():
