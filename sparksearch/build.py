@@ -19,7 +19,8 @@ InternalEngine.index -> Lucene segments; SURVEY.md 3.2):
         docs/gen=G/                docid, url, warc_ts, lang, dl, dl_q
         postings/gen=G/bucket=B/   term, docid, tf, positions, dl_q
         stats_gG/                  (named by meta["stats_path"]) term, df, cf
-        meta.json                  n_docs, avgdl, generations, analyzer
+        meta.json                  version, n_docs, next_docid, avgdl,
+                                   generations, stats_path, analyzer
 
 Scale notes (100 TB / 10^12 docs):
   - docid assignment is the classic two-pass range-partition + per-partition
@@ -56,11 +57,15 @@ __all__ = [
     "analyze_pages",
     "quantized_dl_col",
     "build_index",
+    "read_meta",
     "write_meta",
     "INDEX_VERSION",
 ]
 
-INDEX_VERSION = 4  # v4: UAX#29 WB4 Extend absorption (combining marks attach)
+#: the one on-disk format this engine reads and writes. v5: impact-pair
+#: stats (max_tf, min_dlq), position-free Parquet-array blocks, and a
+#: meta.json with generations, stats_path and next_docid
+INDEX_VERSION = 5
 
 _TOKENS_SCHEMA = T.StructType([
     T.StructField("terms", T.ArrayType(T.StringType()), False),
@@ -382,6 +387,25 @@ def write_stats(spark: SparkSession, out_dir: str, stats_df: DataFrame,
     return vals["n"], vals["m"] or 0, vals["ttf"] or 0
 
 
+def read_meta(index_dir: str, meta: dict | None = None) -> dict:
+    """The committed meta.json of `index_dir` (or a pinned snapshot of it,
+    `meta`), refused unless it is format INDEX_VERSION.
+
+    The one place the format is checked, as Lucene checks it once when it
+    opens the commit point (IndexFormatTooOldException): every reader and
+    writer opens the commit through here, so an older index is refused
+    before anything is read or written."""
+    if meta is None:
+        with open(f"{index_dir}/meta.json") as f:
+            meta = json.load(f)
+    if meta.get("version") != INDEX_VERSION:
+        raise ValueError(
+            f"{index_dir} holds index format version {meta.get('version')}; "
+            f"this engine reads version {INDEX_VERSION} only: rebuild the "
+            "index with build_index")
+    return meta
+
+
 def write_meta(out_dir: str, meta: dict) -> None:
     """Atomic meta.json replace -- the index's commit point (segments_N).
 
@@ -527,6 +551,7 @@ def build_index(pages: DataFrame, out_dir: str, analyzer: str = "standard",
         **({"index_sort": {"field": index_sort[0], "asc": index_sort[1]}}
            if index_sort is not None else {}),
         "n_docs": int(n_docs),
+        "next_docid": int(n_docs),
         "total_tf": int(total_tf),
         "avgdl": float(avgdl),
         "n_terms": int(n_terms),

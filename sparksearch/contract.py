@@ -194,35 +194,48 @@ LIMIT {k}
 # Spark side: cached engine instance per sf_dir
 # ---------------------------------------------------------------------------
 
+def current_meta(index_dir: str) -> dict | None:
+    """The committed meta of `index_dir`, or None when it has no commit
+    or build.read_meta refuses its format."""
+    from sparksearch.build import read_meta
+    try:
+        return read_meta(index_dir)
+    except (OSError, ValueError):
+        return None
+
+
+def cached_index(spark: SparkSession, sf_dir: str, tag: str,
+                 **build_kwargs) -> str:
+    """Directory of an index over sf_dir's pages, kept across runs under
+    the temp dir as sparksearch_ix{tag}_<sf_dir path>: built with
+    n_buckets=8, partitions=8 and `build_kwargs`, and rebuilt when it has
+    no commit or build.read_meta refuses it."""
+    import shutil
+
+    from sparksearch.build import build_index
+    from sparksearch.corpus import pages_from_documents
+
+    out = os.path.join(
+        tempfile.gettempdir(), f"sparksearch_ix{tag}_"
+        + os.path.realpath(sf_dir).strip("/").replace("/", "_"))
+    if current_meta(out) is None:
+        shutil.rmtree(out, ignore_errors=True)
+        build_index(pages_from_documents(spark, sf_dir), out, n_buckets=8,
+                    partitions=8, **build_kwargs)
+    return out
+
+
 _ENGINES: dict[str, "tuple"] = {}
 
 
 def get_engine(spark: SparkSession, sf_dir: str):
     """(IndexReader, Executor) for sf_dir, building the index once."""
-    from sparksearch.build import build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
-    from sparksearch.build import INDEX_VERSION
-
     key = os.path.realpath(sf_dir)
     if key not in _ENGINES:
-        out = os.path.join(tempfile.gettempdir(),
-                           "sparksearch_ix_" + key.strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json as _json
-            with open(meta_path) as f:
-                stale = _json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil as _shutil
-            _shutil.rmtree(out, ignore_errors=True)
-            pages = pages_from_documents(spark, sf_dir)
-            build_index(pages, out, analyzer="standard", n_buckets=8,
-                        partitions=8, resume=False)
-        ix = IndexReader(spark, out)
+        ix = IndexReader(spark, cached_index(spark, sf_dir, ""))
         _ENGINES[key] = (ix, Executor(ix))
     return _ENGINES[key]
 
@@ -233,19 +246,22 @@ _ENGINES_WAND: dict[str, "tuple"] = {}
 def get_engine_wand(spark: SparkSession, sf_dir: str):
     """Executor over the SAME index dir with packed segments + WAND enabled.
 
-    Builds the segment blocks once (idempotent per dir); queries through
-    this executor take the block-max pruned path (wand.py)."""
+    Builds the segment blocks when they do not cover the index's
+    generation (a fresh or rebuilt cached dir, or a segment build that
+    did not finish); queries through this executor take the block-max
+    pruned path (wand.py)."""
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
     key = os.path.realpath(sf_dir)
     if key not in _ENGINES_WAND:
         ix, _ = get_engine(spark, sf_dir)
-        if not os.path.exists(f"{ix.index_dir}/segments_meta.json"):
+        wix = IndexReader(spark, ix.index_dir, use_segments=True)
+        if not wix.segments_cover_all():
             from sparksearch.segments import build_segments
             build_segments(spark, ix.index_dir, salt_target=4096, n_chunks=2,
                            partitions=8)
-        wix = IndexReader(spark, ix.index_dir, use_segments=True)
+            wix = wix.reload()
         _ENGINES_WAND[key] = (wix, Executor(wix))
     return _ENGINES_WAND[key]
 

@@ -13,7 +13,6 @@ avgdl over the FILTERED token stream → BM25.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -28,28 +27,13 @@ _ENGINES_EN: dict[str, tuple] = {}
 
 def _get_english_engine(spark, sf_dir):
     """Engine over the same corpus indexed with the english analyzer."""
-    from sparksearch.build import INDEX_VERSION, build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
     key = os.path.realpath(sf_dir)
     if key not in _ENGINES_EN:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "sparksearch_ixen_" + key.strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json
-            with open(meta_path) as f:
-                stale = json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            build_index(pages_from_documents(spark, sf_dir), out,
-                        analyzer="english", n_buckets=8, partitions=8)
-        ix = IndexReader(spark, out)
+        ix = IndexReader(spark, C.cached_index(spark, sf_dir, "en",
+                                               analyzer="english"))
         _ENGINES_EN[key] = (ix, Executor(ix))
     return _ENGINES_EN[key]
 

@@ -134,13 +134,22 @@ def q_index_stats(spark, sf_dir):
 
 
 def q_msearch(spark, sf_dir):
-    """_msearch: three match queries fused into one scan+shuffle job."""
+    """_msearch: three match queries fused into one scan+shuffle job. As
+    in contract.wand_topk_rounded, each query's exact top-50 is rounded
+    to 4 decimals, re-sorted by (rounded score, docid) and cut to 10, so
+    the boundary tie-break matches the SQL oracle's."""
+    from pyspark.sql import Window
     ex = _ex(spark, sf_dir)
-    return ex.msearch({
+    wide = ex.msearch({
         "q1": Match("text", "hash join"),
         "q2": Match("text", "table scan", operator="and"),
         "q3": Match("text", "fast slow scan", minimum_should_match=2),
-    }, k=10)
+    }, k=50).withColumn("score", F.round("score", 4))
+    rn = F.row_number().over(Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("docid").asc()))
+    return (wide.withColumn("_rn", rn).filter(F.col("_rn") <= 10)
+            .drop("_rn")
+            .orderBy("query_id", F.col("score").desc(), F.col("docid").asc()))
 
 
 def q_term_vectors(spark, sf_dir):

@@ -88,24 +88,15 @@ def _derived_index(spark, sf_dir, expunge: bool):
     """Copy of the shared base index with lang='de' tombstoned via
     delete_by_query; `expunge=True` additionally runs the expunge merge.
     Cached per (sf_dir, variant) like contract.get_engine."""
-    import json
-    import os
     import shutil
 
-    from sparksearch.build import INDEX_VERSION
     from sparksearch.deletes import delete_by_query, expunge_deletes
     from sparksearch.queries import Term
 
     ix, _ = C.get_engine(spark, sf_dir)
     out = ix.index_dir + ("_expunged" if expunge else "_deleted")
-    meta_path = os.path.join(out, "meta.json")
-    want = "expunged" if expunge else "deletes"
-    ok = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            m = json.load(f)
-        ok = m.get("version") == INDEX_VERSION and bool(m.get(want))
-    if not ok:
+    m = C.current_meta(out)
+    if not (m and m.get("expunged" if expunge else "deletes")):
         shutil.rmtree(out, ignore_errors=True)
         shutil.copytree(ix.index_dir, out)
         n = delete_by_query(spark, out, Term("lang", "de"))

@@ -66,7 +66,7 @@ def _pit_snapshot(spark, sf_dir) -> dict:
     import os
     import shutil
 
-    from sparksearch.build import INDEX_VERSION, build_index
+    from sparksearch.build import build_index
     from sparksearch.corpus import pages_from_documents
     from sparksearch.index import IndexReader
     from sparksearch.merge import add_generation
@@ -74,12 +74,10 @@ def _pit_snapshot(spark, sf_dir) -> dict:
     ix, _ = C.get_engine(spark, sf_dir)
     out = ix.index_dir + "_pit"
     pit_path = os.path.join(out, "pit.json")
-    ok = False
-    if os.path.exists(pit_path):
+    if os.path.exists(pit_path) and C.current_meta(out) is not None:
         with open(pit_path) as f:
             pit = json.load(f)
-        ok = pit["meta"].get("version") == INDEX_VERSION
-    if not ok:
+    else:
         shutil.rmtree(out, ignore_errors=True)
         pages = pages_from_documents(spark, sf_dir)
         build_index(pages.filter(F.col("lang") == "en"), out,
@@ -87,7 +85,7 @@ def _pit_snapshot(spark, sf_dir) -> dict:
                     resume=False)
         pit = IndexReader(spark, out).open_pit()
         add_generation(spark, out, pages.filter(F.col("lang") != "en"),
-                       partitions=8, with_segments=False)
+                       partitions=8)
         with open(pit_path, "w") as f:
             json.dump(pit, f)
     return pit

@@ -21,7 +21,6 @@ reference component semantics, not from this package's code).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -52,29 +51,14 @@ def _get_custom_stop_engine(spark, sf_dir):
     """Engine over the same corpus indexed with the `webstop` custom
     analyzer (stopwords join/hash); analyzer_def persists in meta.json so
     the reader re-registers it — disk-cached like contract.get_engine."""
-    from sparksearch.build import INDEX_VERSION, build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
     _register()
     key = os.path.realpath(sf_dir)
     if key not in _ENGINES_CST:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "sparksearch_ixcst_" + key.strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json
-            with open(meta_path) as f:
-                stale = json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            build_index(pages_from_documents(spark, sf_dir), out,
-                        analyzer="webstop", n_buckets=8, partitions=8)
-        ix = IndexReader(spark, out)
+        ix = IndexReader(spark, C.cached_index(spark, sf_dir, "cst",
+                                               analyzer="webstop"))
         _ENGINES_CST[key] = (ix, Executor(ix))
     return _ENGINES_CST[key]
 

@@ -17,7 +17,6 @@ normalization step and both merge/no-merge outcomes.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -117,8 +116,6 @@ def _get_sayt_engine(spark, sf_dir):
     """Engine indexed with unigrams + 2-shingles in one field — the
     search_as_you_type ._2gram subfield analogue."""
     from sparksearch.analysis_custom import register_analyzer
-    from sparksearch.build import INDEX_VERSION, build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
@@ -129,21 +126,8 @@ def _get_sayt_engine(spark, sf_dir):
                     "max_shingle_size": 2, "output_unigrams": True}]})
     key = os.path.realpath(sf_dir)
     if key not in _ENGINES_SAYT:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "sparksearch_ixsayt_" + key.strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json
-            with open(meta_path) as f:
-                stale = json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            build_index(pages_from_documents(spark, sf_dir), out,
-                        analyzer="sayt", n_buckets=8, partitions=8)
-        ix = IndexReader(spark, out)
+        ix = IndexReader(spark, C.cached_index(spark, sf_dir, "sayt",
+                                               analyzer="sayt"))
         _ENGINES_SAYT[key] = (ix, Executor(ix))
     return _ENGINES_SAYT[key]
 
@@ -164,29 +148,13 @@ _ENGINES_TP: dict[str, tuple] = {}
 def _get_tp_engine(spark, sf_dir):
     """Minute-partitioned engine (data-stream / ILM rollover layout):
     docs + postings carry a pday directory column derived from warc_ts."""
-    from sparksearch.build import INDEX_VERSION, build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
     key = os.path.realpath(sf_dir)
     if key not in _ENGINES_TP:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "sparksearch_ixtp_" + key.strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json
-            with open(meta_path) as f:
-                stale = json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            build_index(pages_from_documents(spark, sf_dir), out,
-                        n_buckets=8, partitions=8,
-                        time_partition="minute")
-        ix = IndexReader(spark, out)
+        ix = IndexReader(spark, C.cached_index(spark, sf_dir, "tp",
+                                               time_partition="minute"))
         _ENGINES_TP[key] = (ix, Executor(ix))
     return _ENGINES_TP[key]
 

@@ -133,30 +133,13 @@ def _get_sorted_ix(spark, sf_dir):
     """Index with index_sort=(dl asc) — Lucene index sorting; cached per
     sf_dir like contract.get_engine."""
     import os
-    import tempfile
 
-    from sparksearch.build import INDEX_VERSION, build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.index import IndexReader
 
     key = os.path.realpath(sf_dir)
     if key not in _SORTED_IX:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "sparksearch_ixsort_" + key.strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json
-            with open(meta_path) as f:
-                stale = json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            build_index(pages_from_documents(spark, sf_dir), out,
-                        n_buckets=8, partitions=8,
-                        index_sort=("dl", True))
-        _SORTED_IX[key] = IndexReader(spark, out)
+        _SORTED_IX[key] = IndexReader(spark, C.cached_index(
+            spark, sf_dir, "sort", index_sort=("dl", True)))
     return _SORTED_IX[key]
 
 

@@ -22,7 +22,6 @@ text.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -61,30 +60,14 @@ def _register_lang(lang: str) -> str:
 
 
 def _get_lang_engine(spark, sf_dir: str, lang: str):
-    from sparksearch.build import INDEX_VERSION, build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
 
     an = _register_lang(lang)
     key = (os.path.realpath(sf_dir), lang)
     if key not in _ENGINES:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            f"sparksearch_ix{lang[:2]}_"
-            + key[0].strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json
-            with open(meta_path) as f:
-                stale = json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            build_index(pages_from_documents(spark, sf_dir), out,
-                        analyzer=an, n_buckets=8, partitions=8)
-        ix = IndexReader(spark, out)
+        ix = IndexReader(spark, C.cached_index(spark, sf_dir, lang[:2],
+                                               analyzer=an))
         _ENGINES[key] = (ix, Executor(ix))
     return _ENGINES[key]
 

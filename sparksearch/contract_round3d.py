@@ -399,11 +399,9 @@ def q_search_analyzer_autocomplete(spark, sf_dir):
     (TextFieldMapper searchAnalyzer; the hit SET is gated, scores are
     edge-ngram BM25 and deliberately not mirrored)."""
     import os
-    import tempfile
 
+    from sparksearch import contract as C
     from sparksearch.analysis_custom import register_analyzer
-    from sparksearch.build import INDEX_VERSION, build_index
-    from sparksearch.corpus import pages_from_documents
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
     from sparksearch.queries import Match
@@ -416,22 +414,9 @@ def q_search_analyzer_autocomplete(spark, sf_dir):
                                 "filter": ["lowercase"]})
     key = os.path.realpath(sf_dir)
     if key not in _ENGINES_SA:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "sparksearch_ixsa_" + key.strip("/").replace("/", "_"))
-        meta_path = os.path.join(out, "meta.json")
-        stale = True
-        if os.path.exists(meta_path):
-            import json
-            with open(meta_path) as f:
-                stale = json.load(f).get("version") != INDEX_VERSION
-        if stale:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            build_index(pages_from_documents(spark, sf_dir), out,
-                        analyzer="sa_edge", search_analyzer="sa_kw",
-                        n_buckets=8, partitions=8)
-        _ENGINES_SA[key] = Executor(IndexReader(spark, out))
+        _ENGINES_SA[key] = Executor(IndexReader(spark, C.cached_index(
+            spark, sf_dir, "sa", analyzer="sa_edge",
+            search_analyzer="sa_kw")))
     ex = _ENGINES_SA[key]
     hits = ex.search(Match("text", "TAB"), k=100000, fetch=True)
     return hits.select("url").orderBy("url")

@@ -899,7 +899,6 @@ def _ds_fixture(spark, sf_dir: str):
     from sparksearch import contract as C
     from sparksearch import datastreams as DS
     from sparksearch import templates as T
-    from sparksearch.build import INDEX_VERSION
     key = os.path.realpath(sf_dir)
     if key in _DS_STATE:
         return _DS_STATE[key]
@@ -907,16 +906,9 @@ def _ds_fixture(spark, sf_dir: str):
                         "sparksearch_ds_" + key.strip("/").replace("/", "_"))
     ds_path = os.path.join(root, "datastreams.json")
     tpl_path = os.path.join(root, "templates.json")
-    metas = [os.path.join(root, DS.backing_index_name("weblogs", g),
-                          "meta.json") for g in (1, 2)]
-    fresh = all(os.path.exists(m) for m in metas)
-    if fresh:
-        import json as _json
-        for m in metas:
-            with open(m) as f:
-                if _json.load(f).get("version") != INDEX_VERSION:
-                    fresh = False
-    if not fresh:
+    if not all(C.current_meta(os.path.join(
+            root, DS.backing_index_name("weblogs", g))) is not None
+            for g in (1, 2)):
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root)
         T.put_index_template(tpl_path, "weblogs_tpl", {

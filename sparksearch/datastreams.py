@@ -27,6 +27,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparksearch.build import read_meta
+
 BACKING_INDEX_PREFIX = ".ds-"
 
 __all__ = [
@@ -245,12 +247,10 @@ def data_stream_stats(ds_path: str, name: str) -> dict:
     entry = _entry(_load(ds_path), name)
     per = {}
     for ix_name in entry["indices"]:
-        mp = os.path.join(entry["dirs"][ix_name], "meta.json")
-        if os.path.exists(mp):
-            with open(mp) as f:
-                per[ix_name] = int(json.load(f)["n_docs"])
-        else:
-            per[ix_name] = 0
+        d = entry["dirs"][ix_name]
+        per[ix_name] = (int(read_meta(d)["n_docs"])
+                        if os.path.exists(os.path.join(d, "meta.json"))
+                        else 0)
     return {"generation": entry["generation"],
             "timestamp_field": entry["timestamp_field"],
             "backing_indices": len(entry["indices"]),

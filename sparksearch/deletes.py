@@ -34,14 +34,13 @@ segment-commit-time values — and that is exactly the semantics here:
 
 from __future__ import annotations
 
-import json
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparksearch.build import write_meta, write_stats
+from sparksearch.build import read_meta, write_meta, write_stats
 from sparksearch.index import IndexReader
 from sparksearch.segments import next_generation
 
@@ -76,8 +75,7 @@ def delete_by_query(spark: SparkSession, index_dir: str, q,
         shutil.rmtree(f"{index_dir}/{rel}", ignore_errors=True)
         return 0
 
-    with open(f"{index_dir}/meta.json") as f:
-        meta = json.load(f)
+    meta = read_meta(index_dir)
     meta["deletes"] = meta.get("deletes", []) + [rel]
     meta["n_deleted"] = int(meta.get("n_deleted", 0)) + n
     write_meta(index_dir, meta)
@@ -140,9 +138,13 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
     (ix.docs  # property applies the liveDocs anti-join
      .repartitionByRange(max(1, (partitions or 8) // 2), "docid")
      .sortWithinPartitions("docid")
-     .observe(obs, F.count(F.lit(1)).alias("n"))
+     .observe(obs, F.count(F.lit(1)).alias("n"),
+              F.max("docid").alias("max_docid"))
      .write.mode("overwrite").parquet(f"{index_dir}/docs/gen={new_gen}"))
     n_docs = int(obs.get["n"])
+    # survivors keep their docids, so the next batch numbers from past the
+    # largest one, not from the (smaller) live count
+    next_docid = int(obs.get["max_docid"]) + 1
 
     # live postings, re-bucketed exactly as the builder writes them
     live_post = ix.postings
@@ -180,8 +182,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
                 "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))),
             covers=[new_gen])
         seg_meta = _load_seg_meta(index_dir)
-        old_seg_gens = [g for g in seg_meta.get("generations", [])
-                        if g != new_gen]
+        old_seg_gens = [g for g in seg_meta["generations"] if g != new_gen]
         seg_meta["generations"] = [new_gen]
         seg_meta["covers"] = [new_gen]
         seg_meta["expunged_from"] = old_seg_gens
@@ -193,6 +194,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
     meta = dict(ix.meta)
     meta.update({
         "n_docs": n_docs,
+        "next_docid": next_docid,
         "avgdl": (total_tf / n_docs) if n_docs else 1.0,
         "n_terms": int(n_terms),
         "max_df": int(max_df),

@@ -185,20 +185,12 @@ class Executor:
         # so WAND stays exact under ANY BM25 (k1, b) — bounds are
         # re-derived at query time (wand_topk docstring); non-BM25
         # similarities (LM/DFR/DFI/IB/boolean/scripted) use the plan path.
-        # An index whose stats table predates the (max_tf, min_dlq)
-        # impact columns has no WAND bound, and segments in the retired
-        # varint block format do not count as covering: auto mode plans
-        # either on row postings.
-        from sparksearch.index import IMPACT_COLUMNS
         from sparksearch.similarity import BM25Similarity
         use_wand = (mode in ("auto", "wand") and isinstance(q, Match)
                     and q.fuzziness is None
                     and isinstance(self.sim, BM25Similarity)
                     and self.ix.use_segments
-                    and (mode == "wand"
-                         or (self.ix.segments_cover_all()
-                             and set(IMPACT_COLUMNS)
-                             <= set(self.ix.stats.columns))))
+                    and (mode == "wand" or self.ix.segments_cover_all()))
         if use_wand:
             # synonym-stacked analyzers need blended per-position scoring —
             # the packed-segment WAND path scores exact terms independently
@@ -279,8 +271,6 @@ class Executor:
             return self._empty().select(
                 F.lit("").alias("query_id"), "docid", "score")
         allq = reduce(lambda a, b: a.unionByName(b), legs)
-        allq = allq.select("query_id", "docid",
-                           F.round("score", 4).alias("score"))
         rn = F.row_number().over(
             Window.partitionBy("query_id")
                   .orderBy(F.col("score").desc(), F.col("docid").asc()))

@@ -8,12 +8,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["IndexReader", "index_stats", "set_alias", "resolve_alias",
-           "open_index", "pit_reader", "literal_frame", "IMPACT_COLUMNS"]
+from sparksearch.build import read_meta, write_meta
 
-#: term-level impact pair in the stats table: the block-max WAND bound
-#: needs both (wand.wand_topk)
-IMPACT_COLUMNS = ("max_tf", "min_dlq")
+__all__ = ["IndexReader", "index_stats", "set_alias", "resolve_alias",
+           "open_index", "pit_reader", "literal_frame"]
 
 
 class IndexReader:
@@ -21,6 +19,9 @@ class IndexReader:
 
     DataFrames are lazy; term lookups prune by `bucket` directory partition
     + parquet row-group min/max on the sorted `term` column.
+
+    Opening a reader refuses any index format but build.INDEX_VERSION
+    (build.read_meta), also for a pinned point-in-time snapshot.
 
     A reader is pinned to one meta.json commit, so each table is read (its
     files listed and its schema inferred, one Spark job) once per reader,
@@ -36,12 +37,8 @@ class IndexReader:
                  use_segments: bool = False, meta: dict | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        if meta is not None:
-            # pinned snapshot (point-in-time) — see open_pit
-            self.meta = dict(meta)
-        else:
-            with open(f"{index_dir}/meta.json") as f:
-                self.meta = json.load(f)
+        # meta: a pinned snapshot (point-in-time) — see open_pit
+        self.meta = dict(read_meta(index_dir, meta))
         self.n_docs: int = self.meta["n_docs"]
         self.avgdl: float = self.meta["avgdl"]
         self.analyzer: str = self.meta["analyzer"]
@@ -62,8 +59,8 @@ class IndexReader:
         #: (pday directory column on docs + postings)
         self.time_partition: str | None = self.meta.get("time_partition")
         self.n_buckets: int = self.meta["n_buckets"]
-        self.generations: list[int] = self.meta.get("generations", [0])
-        self.stats_path: str = self.meta.get("stats_path", "stats")
+        self.generations: list[int] = self.meta["generations"]
+        self.stats_path: str = self.meta["stats_path"]
         #: let Executor.search run match queries by block-max WAND
         #: over the packed segments (segments.py)
         self.use_segments = use_segments
@@ -92,8 +89,8 @@ class IndexReader:
         self._gen_union("postings")
         self.stats
         self.deleted
-        if use_segments:
-            self.segments_cover_all()
+        if use_segments and self.segments_cover_all():
+            self.segments.blocks
 
     def reload(self) -> "IndexReader":
         """Re-read meta.json (after add_generation / merge commits)."""
@@ -113,21 +110,13 @@ class IndexReader:
         yet (segments would silently omit those docs) or segments hold an
         uncommitted generation (phantom docs). The WAND path falls back to
         row postings until merge.ensure_segments repairs.
-        Segments in the retired varint block format count as not covering
-        (search plans on row postings until they are rebuilt).
         Cached per reader instance — IndexReader.reload() picks up commits,
         matching the snapshot semantics of meta loaded at init."""
         if self._covered is None:
             import os
-            if not os.path.exists(f"{self.index_dir}/segments_meta.json"):
-                self._covered = False
-            else:
-                try:
-                    self._covered = (set(self.segments.covers)
-                                     == set(self.generations)
-                                     and not self.segments.legacy_format)
-                except Exception:
-                    self._covered = False
+            self._covered = (
+                os.path.exists(f"{self.index_dir}/segments_meta.json")
+                and set(self.segments.covers) == set(self.generations))
         return self._covered
 
     def _relation(self, name: str, *paths: str,
@@ -294,19 +283,16 @@ class IndexReader:
         """{term: (df, cf, max_tf, min_dlq)} for the given terms the index
         holds; terms it does not hold are left out. One bounded collect
         for the terms this reader has not looked up before, none when
-        all were. max_tf/min_dlq are None on an index whose stats table
-        predates the impact columns.
+        all were.
 
         Every scoring path reads term statistics through this one method,
         so a reader view may override it (multisearch._DfsReader)."""
         want = sorted(set(terms) - self._term_stats.keys())
         if want:
-            s = self.stats
-            impact = [F.col(c) if c in s.columns else F.lit(None)
-                      for c in IMPACT_COLUMNS]
             got = {r[0]: tuple(r[1:]) for r in
-                   s.filter(F.col("term").isin(want))
-                    .select("term", "df", "cf", *impact).collect()}
+                   self.stats.filter(F.col("term").isin(want))
+                   .select("term", "df", "cf", "max_tf", "min_dlq")
+                   .collect()}
             for t in want:
                 self._term_stats[t] = got.get(t)
         return {t: v for t in set(terms)
@@ -327,8 +313,7 @@ def literal_frame(spark: SparkSession, names: list[str],
 def pit_reader(spark: SparkSession, pit: dict) -> "IndexReader":
     """Reader over an open_pit snapshot — ignores every commit after it."""
     return IndexReader(spark, pit["index_dir"],
-                       use_segments=pit.get("use_segments", False),
-                       meta=pit["meta"])
+                       use_segments=pit["use_segments"], meta=pit["meta"])
 
 
 def index_stats(ix: "IndexReader") -> DataFrame:
@@ -336,15 +321,10 @@ def index_stats(ix: "IndexReader") -> DataFrame:
     from the committed meta + segments manifests (doc count, term count,
     total tf, avgdl, generations, packed-segment payload bytes) — all
     driver-side metadata, no scan (sv/action/admin/indices/stats)."""
-    import os
+    from sparksearch.segments import _load_seg_meta
     m = ix.meta
-    seg_payload = 0
-    seg_path = f"{ix.index_dir}/segments_meta.json"
-    if os.path.exists(seg_path):
-        with open(seg_path) as f:
-            seg = json.load(f)
-        seg_payload = sum(g.get("payload_bytes", 0)
-                          for g in seg.get("gens", {}).values())
+    seg_payload = sum(g["payload_bytes"] for g in
+                      _load_seg_meta(ix.index_dir)["gens"].values())
     row = [(int(m["n_docs"]), int(m["n_terms"]), int(m["total_tf"]),
             float(round(m["avgdl"], 6)), len(ix.generations),
             int(seg_payload))]
@@ -423,13 +403,10 @@ def rollover(registry_path: str, alias: str, new_index_dir: str,
     index defer age-based rollover forever).  No conditions at all =
     unconditional rollover, matching the REST default.
     """
-    import os
     import time as _time
     cur = resolve_alias(registry_path, alias)
-    with open(f"{cur}/meta.json") as f:
-        meta = json.load(f)
-    born = meta.get("created_ts") or os.path.getmtime(f"{cur}/meta.json")
-    age_s = _time.time() - born
+    meta = read_meta(cur)
+    age_s = _time.time() - meta["created_ts"]
     conds: dict[str, bool] = {}
     if max_docs is not None:
         conds[f"[max_docs: {max_docs}]"] = meta["n_docs"] >= max_docs
@@ -508,9 +485,6 @@ def reshard(spark: SparkSession, index_dir: str, out_dir: str,
         shutil.copytree(os.path.join(index_dir, rel), dst,
                         dirs_exist_ok=True)
     meta["resharded_from"] = index_dir
-    tmp = f"{out_dir}/meta.json.tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=2)
-    os.replace(tmp, f"{out_dir}/meta.json")
+    write_meta(out_dir, meta)
     return {"source": index_dir, "target": out_dir,
             "n_buckets": int(n_buckets)}

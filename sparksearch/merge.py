@@ -8,8 +8,9 @@ sv/index/MergePolicyConfig.java:136-236, segmentsPerTier=10). The batch
 analogues here:
 
   add_generation(spark, dir, new_pages)
-      Analyze the batch with docids starting at the current n_docs, write
-      docs/gen=G + postings/gen=G + segments/gen=G, recompute global stats
+      Analyze the batch with docids starting at the committed next_docid,
+      write docs/gen=G + postings/gen=G (+ segments/gen=G when the index
+      has packed segments), recompute global stats
       as old-stats ∪ delta (groupBy sum — no corpus rescan), then commit by
       atomically replacing meta.json (the segments_N analogue). Readers see
       either the old or the new index, never a partial one. Global df/N/
@@ -19,11 +20,10 @@ analogues here:
 
   merge_segments(spark, dir)
       The compaction pass: unpack every live generation's blocks back to
-      (term, docid, tf, dl_q) rows (segments.decode_blocks; blocks hold
-      no positions, as they serve WAND only), re-encode them through the
-      same salted (term, salt)-keyed Catalyst encoder into one
-      consolidated generation, commit segments_meta.json, and delete the
-      old generation dirs.
+      (term, docid, tf, dl_q) rows (segments.decode_blocks), re-encode
+      them through the same salted (term, salt)-keyed Catalyst encoder
+      into one consolidated generation, commit segments_meta.json, and
+      delete the old generation dirs.
       Blocks hold absolute docids, so merging never rewrites docids;
       per-term block sets from disjoint docid ranges simply interleave.
 
@@ -33,7 +33,7 @@ generations, MergePolicyConfig.java:203-236).
 
 from __future__ import annotations
 
-import json
+import os
 import shutil
 import time
 
@@ -41,8 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparksearch.build import (
-    INDEX_VERSION,
     analyze_pages,
+    read_meta,
     write_docs_postings,
     write_meta,
     write_stats,
@@ -66,20 +66,21 @@ SEGMENTS_PER_TIER = 10
 def add_generation(spark: SparkSession, index_dir: str, new_pages: DataFrame,
                    partitions: int | None = None,
                    salt_target: int = 65536, n_chunks: int = 1,
-                   with_segments: bool = True,
                    batch_id: int | None = None) -> dict:
     """Index a new batch of pages as the next generation. Returns new meta.
+
+    New docids start at the committed `next_docid`, so they never reuse a
+    docid an expunge kept. On an index with packed segments
+    (segments_meta.json) the blocks are extended after the commit; an
+    index without them stays without them.
 
     `batch_id` (streaming) is recorded inside meta.json's indexed_batches in
     the SAME atomic commit as the generation itself — a crash can never
     leave a committed generation whose batch id is unrecorded (which would
-    replay + duplicate the batch on restart; the old two-file scheme had
-    exactly that window)."""
-    with open(f"{index_dir}/meta.json") as f:
-        meta = json.load(f)
-    assert meta["version"] == INDEX_VERSION, "index version mismatch"
+    replay + duplicate the batch on restart)."""
+    meta = read_meta(index_dir)
     gen = next_generation(index_dir)
-    base = int(meta["n_docs"])
+    base = int(meta["next_docid"])
     analyzer = meta["analyzer"]
     if "analyzer_def" in meta:
         from sparksearch.analysis_custom import ensure_registered
@@ -106,22 +107,11 @@ def add_generation(spark: SparkSession, index_dir: str, new_pages: DataFrame,
                       F.max("e.tf").cast("int").alias("max_tf"),
                       F.min("dl_q").cast("long").alias("min_dlq")))
         old = spark.read.parquet(f"{index_dir}/{meta['stats_path']}")
-        if "max_tf" not in old.columns:
-            # pre-impact-stats index: old generations' (max_tf, min_dlq)
-            # are unknown, and max(delta) alone would UNDER-estimate the
-            # bound (unsound pruning) — drop the columns; search plans
-            # such an index instead of running WAND until a full rebuild
-            delta = delta.drop("max_tf", "min_dlq")
-            merged = (old.unionByName(delta)
-                      .groupBy("term")
-                      .agg(F.sum("df").alias("df"),
-                           F.sum("cf").alias("cf")))
-        else:
-            merged = (old.unionByName(delta)
-                      .groupBy("term")
-                      .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-                           F.max("max_tf").alias("max_tf"),
-                           F.min("min_dlq").alias("min_dlq")))
+        merged = (old.unionByName(delta)
+                  .groupBy("term")
+                  .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
+                       F.max("max_tf").alias("max_tf"),
+                       F.min("min_dlq").alias("min_dlq")))
         stats_result["v"] = write_stats(
             spark, index_dir, merged, stats_path, partitions)
 
@@ -145,9 +135,10 @@ def add_generation(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     tok.unpersist()
     ranged.unpersist()
 
-    n_docs = base + n_new
+    n_docs = int(meta["n_docs"]) + n_new
     meta.update({
         "n_docs": int(n_docs),
+        "next_docid": base + n_new,
         "total_tf": int(total_tf),
         "avgdl": float(total_tf / n_docs) if n_docs else 1.0,
         "n_terms": int(n_terms),
@@ -159,7 +150,7 @@ def add_generation(spark: SparkSession, index_dir: str, new_pages: DataFrame,
         meta.setdefault("indexed_batches", {})[str(batch_id)] = gen
     write_meta(index_dir, meta)  # commit point
 
-    if with_segments:
+    if os.path.exists(f"{index_dir}/segments_meta.json"):
         # repair-then-extend: builds segments for THIS generation and for
         # any earlier committed generation whose segment build crashed
         # before registering (readers fall back to row postings until then
@@ -175,10 +166,8 @@ def ensure_segments(spark: SparkSession, index_dir: str,
     """Build packed segments for every committed meta generation not yet
     covered by segments_meta.json (the crash window between the meta.json
     commit and the segment build/registration). Returns the repaired gens."""
-    with open(f"{index_dir}/meta.json") as f:
-        meta = json.load(f)
-    seg = _load_seg_meta(index_dir)
-    covered = set(seg.get("covers", seg.get("generations", [])))
+    meta = read_meta(index_dir)
+    covered = set(_load_seg_meta(index_dir)["covers"])
     missing = [g for g in meta["generations"] if g not in covered]
     for g in missing:
         build_segments(spark, index_dir, gen=g, salt_target=salt_target,
@@ -188,8 +177,7 @@ def ensure_segments(spark: SparkSession, index_dir: str,
 
 def should_merge(index_dir: str,
                  segments_per_tier: int = SEGMENTS_PER_TIER) -> bool:
-    seg = _load_seg_meta(index_dir)
-    return len(seg.get("generations", [])) >= segments_per_tier
+    return len(_load_seg_meta(index_dir)["generations"]) >= segments_per_tier
 
 
 def merge_segments(spark: SparkSession, index_dir: str,
@@ -202,17 +190,15 @@ def merge_segments(spark: SparkSession, index_dir: str,
     global stats, which merging does not touch).
     """
     t0 = time.time()
+    n_buckets = read_meta(index_dir)["n_buckets"]
     seg_meta = _load_seg_meta(index_dir)
-    old_gens = list(seg_meta.get("generations", []))
+    old_gens = list(seg_meta["generations"])
     if len(old_gens) <= 1:
         return seg_meta
     new_gen = next_generation(index_dir)
 
     reader = SegmentsReader(spark, index_dir)
-    reader.require_current("merge_segments")
     covers = list(reader.covers)  # meta gens represented — unchanged by merge
-    with open(f"{index_dir}/meta.json") as f:
-        n_buckets = json.load(f)["n_buckets"]
     decoded = (decode_blocks(reader.blocks)
                .withColumn("bucket",
                            F.pmod(F.xxhash64("term"), F.lit(n_buckets))))

@@ -102,12 +102,8 @@ class _DfsReader:
 
 
 def _sum_stats(a: tuple, b: tuple) -> tuple:
-    """Two indices' (df, cf, max_tf, min_dlq) for one term, combined; an
-    impact value either side lacks (None) stays unknown."""
-    known = a[2] is not None and b[2] is not None
-    return (a[0] + b[0], a[1] + b[1],
-            max(a[2], b[2]) if known else None,
-            min(a[3], b[3]) if known else None)
+    """Two indices' (df, cf, max_tf, min_dlq) for one term, combined."""
+    return (a[0] + b[0], a[1] + b[1], max(a[2], b[2]), min(a[3], b[3]))
 
 
 def dfs_msearch_indices(executors: dict, q, k: int = 10,

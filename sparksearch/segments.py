@@ -21,8 +21,7 @@ is the write path). Layout under <index_dir>/segments/:
   segments_meta.json                      generations, params
 
 Blocks serve WAND only: every other query reads the row postings (the
-one posting store), so blocks carry no positions. Older blocks with a
-`positions` column still serve WAND and merge: no reader selects it.
+one posting store), so blocks carry no positions.
 
 The block payload is plain Parquet arrays, so the engine itself encodes
 and decodes it: blocks are built by Catalyst (a row_number over each
@@ -57,7 +56,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from sparksearch.build import read_meta
 
 __all__ = ["build_segments", "encode_blocks", "decode_blocks",
            "SegmentsReader", "next_generation", "BLOCK_SIZE"]
@@ -80,7 +80,8 @@ def encode_blocks(postings: DataFrame, n_docs: int,
     per posting block of the segment layout, all in Catalyst.
 
     `nsalt_map` gives the salt count of each head term (others get 1);
-    salt s of a term holds the docids in [s·n_docs/S, (s+1)·n_docs/S)."""
+    salt s of a term holds the docids in [s·n_docs/S, (s+1)·n_docs/S),
+    where `n_docs` spans the docid space (meta's next_docid)."""
     if nsalt_map:
         ns_col = F.coalesce(
             F.element_at(
@@ -151,9 +152,8 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
     were never built (the WAND path falls back to row postings until
     merge.ensure_segments repairs it).
     """
-    with open(f"{index_dir}/meta.json") as f:
-        meta = json.load(f)
-    n_docs = int(meta["n_docs"])
+    meta = read_meta(index_dir)
+    n_docs = int(meta["next_docid"])  # the docid space the salts split
     gen_dir = f"{index_dir}/segments/gen={gen}"
     if not resume:
         shutil.rmtree(gen_dir, ignore_errors=True)
@@ -162,8 +162,7 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
 
     # salting plan for head terms, from the global stats table (driver-side:
     # Zipf head is tiny — terms needing >1 salt are those with df > target)
-    stats = spark.read.parquet(
-        f"{index_dir}/{meta.get('stats_path', 'stats')}")
+    stats = spark.read.parquet(f"{index_dir}/{meta['stats_path']}")
     head = (stats.filter(F.col("df") > salt_target)
             .select("term", F.ceil(F.col("df") / salt_target)
                     .cast("int").alias("nsalts")))
@@ -234,12 +233,10 @@ def build_segments(spark: SparkSession, index_dir: str, *, gen: int = 0,
         "chunks": manifests,
     }
     seg_meta = _load_seg_meta(index_dir)
-    prior_covers = set(seg_meta.get("covers", seg_meta.get("generations", [])))
-    seg_meta["generations"] = sorted(set(seg_meta.get("generations", [])
-                                         + [gen]))
+    seg_meta["generations"] = sorted(set(seg_meta["generations"] + [gen]))
     seg_meta["covers"] = sorted(
-        prior_covers | set(covers if covers is not None else [gen]))
-    seg_meta.setdefault("gens", {})[str(gen)] = gen_meta
+        set(seg_meta["covers"]) | set(covers if covers is not None else [gen]))
+    seg_meta["gens"][str(gen)] = gen_meta
     _write_seg_meta(index_dir, seg_meta)
     return gen_meta
 
@@ -249,7 +246,7 @@ def _load_seg_meta(index_dir: str) -> dict:
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)
-    return {"generations": [], "gens": {}}
+    return {"generations": [], "covers": [], "gens": {}}
 
 
 def _write_seg_meta(index_dir: str, seg_meta: dict) -> None:
@@ -262,9 +259,8 @@ def _write_seg_meta(index_dir: str, seg_meta: dict) -> None:
 def next_generation(index_dir: str) -> int:
     """1 + the largest generation in meta.json or segments_meta.json: one
     number space, so no writer rebuilds over another's generation."""
-    with open(f"{index_dir}/meta.json") as f:
-        gens = json.load(f).get("generations", [0])
-    return 1 + max(gens + _load_seg_meta(index_dir)["generations"])
+    return 1 + max(read_meta(index_dir)["generations"]
+                   + _load_seg_meta(index_dir)["generations"])
 
 
 class SegmentsReader:
@@ -277,7 +273,7 @@ class SegmentsReader:
             self.meta = json.load(f)
         self.generations: list[int] = self.meta["generations"]
         #: meta (docs/postings) generations represented by these segments
-        self.covers: list[int] = self.meta.get("covers", self.generations)
+        self.covers: list[int] = self.meta["covers"]
         self._blocks: DataFrame | None = None
 
     @property
@@ -289,22 +285,6 @@ class SegmentsReader:
             self._blocks = self.spark.read.option("basePath", base).parquet(
                 *[f"{base}/gen={g}" for g in self.generations])
         return self._blocks
-
-    @property
-    def legacy_format(self) -> bool:
-        """True when the blocks were written by the retired varint codec
-        (BINARY docids). Read from the relation's schema: no job."""
-        return isinstance(self.blocks.schema["docids"].dataType,
-                          T.BinaryType)
-
-    def require_current(self, caller: str) -> None:
-        """ValueError naming the rebuild when the blocks are legacy."""
-        if self.legacy_format:
-            raise ValueError(
-                f"{caller}: the segments under {self.index_dir} use the "
-                "retired varint block format (BINARY docids); rebuild them "
-                "with build_segments(spark, index_dir, gen=g) for each g "
-                f"in {self.generations}")
 
     def blocks_for(self, terms: list[str], buckets: list[int]) -> DataFrame:
         uniq = sorted(set(terms))

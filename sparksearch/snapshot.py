@@ -36,6 +36,8 @@ import os
 import shutil
 import time
 
+from sparksearch.build import read_meta
+
 __all__ = [
     "create_snapshot", "restore_snapshot", "list_snapshots",
     "delete_snapshot", "verify_repository", "mount_snapshot",
@@ -155,11 +157,9 @@ def create_snapshot(index_dir: str, repo_dir: str, name: str,
         raise ValueError(f"invalid snapshot name {name!r}")
     if os.path.exists(_manifest_path(repo_dir, name)):
         raise ValueError(f"snapshot {name!r} already exists in {repo_dir}")
-    meta_path = os.path.join(index_dir, "meta.json")
-    if not os.path.exists(meta_path):
+    if not os.path.exists(os.path.join(index_dir, "meta.json")):
         raise FileNotFoundError(f"{index_dir} has no meta.json commit")
-    with open(meta_path) as f:
-        meta = json.load(f)
+    meta = read_meta(index_dir)
 
     rels = _index_files(index_dir)
     os.makedirs(os.path.join(repo_dir, _SNAPS), exist_ok=True)

@@ -17,18 +17,14 @@ id INSIDE the same meta.json commit as the generation itself
 (add_generation(batch_id=...)): replayed batch ids are skipped, and no
 crash point can separate "generation committed" from "batch recorded" —
 Structured Streaming's at-least-once contract + atomic dedup =
-exactly-once indexing. (An earlier design kept batch ids in a separate
-streaming_state.json written after the commit; a crash between the two
-writes replayed and double-indexed the batch.)
+exactly-once indexing.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from sparksearch.build import read_meta
 from sparksearch.merge import add_generation, merge_segments, should_merge
 
 __all__ = ["stream_index", "indexed_batches",
@@ -37,18 +33,8 @@ __all__ = ["stream_index", "indexed_batches",
 
 
 def indexed_batches(index_dir: str) -> dict[str, int]:
-    """batch_id (str) → generation it became (from meta.json; merges any
-    legacy streaming_state.json left by the pre-atomic scheme)."""
-    out: dict[str, int] = {}
-    legacy = f"{index_dir}/streaming_state.json"
-    if os.path.exists(legacy):
-        with open(legacy) as f:
-            out.update(json.load(f))
-    meta_path = f"{index_dir}/meta.json"
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            out.update(json.load(f).get("indexed_batches", {}))
-    return out
+    """batch_id (str) → generation it became (from meta.json)."""
+    return read_meta(index_dir).get("indexed_batches", {})
 
 
 def stream_index(spark: SparkSession, source_dir: str, index_dir: str,

@@ -57,9 +57,8 @@ def wand_topk(ix, q: Match, k: int = 10,
     """Exact BM25 top-k for a match query via block-max pruning.
 
     Returns DataFrame(docid, score), score desc / docid asc, ≤ k rows.
-    `ix` is an IndexReader with packed segments built and the term-level
-    (max_tf, min_dlq) impact columns in its stats table; ValueError
-    otherwise (Executor.search mode="auto" plans such an index instead).
+    `ix` is an IndexReader with packed segments built; the term-level
+    (max_tf, min_dlq) impact pair comes from its stats table.
 
     ``k1``/``b`` tune the BM25 parameters (default: the reference
     defaults 1.2/0.75). The stored impact pairs are raw per-block
@@ -70,13 +69,6 @@ def wand_topk(ix, q: Match, k: int = 10,
     """
     k1 = bm25.K1 if k1 is None else float(k1)
     b = bm25.B if b is None else float(b)
-    from sparksearch.index import IMPACT_COLUMNS
-    missing = [c for c in IMPACT_COLUMNS if c not in ix.stats.columns]
-    if missing:
-        raise ValueError(
-            f"wand_topk needs the stats columns {missing}; this index's "
-            "stats table predates them — rebuild it, or use the plan path")
-    ix.segments.require_current("wand_topk")
     toks = analyze(q.text, q.analyzer or ix.search_analyzer)
     terms = [t for t, _ in toks]
     if len({p for _, p in toks}) != len(toks):

@@ -141,11 +141,12 @@ def test_should_merge_trigger(incr_index):
     assert should_merge(incr_index, segments_per_tier=1)
 
 
-def test_crash_window_coverage_guard(spark, tmp_path_factory):
+def test_crash_window_coverage_guard(spark, tmp_path_factory, monkeypatch):
     """meta.json committed but segments not yet built for the newest
     generation: auto mode must fall back to the row-postings plan (no
     silently-missing docs), ensure_segments must repair, and covers must
     survive a merge."""
+    from sparksearch import merge
     from sparksearch.build import build_index
     from sparksearch.exec import Executor
     from sparksearch.index import IndexReader
@@ -162,8 +163,13 @@ def test_crash_window_coverage_guard(spark, tmp_path_factory):
     build_segments(spark, out, salt_target=64, n_chunks=1, partitions=4)
 
     # simulate the crash: generation committed, segment build never ran
-    add_generation(spark, out, half2, partitions=4, with_segments=False,
-                   batch_id=7)
+    def crash(*a, **kw):
+        raise RuntimeError("killed after the meta.json commit")
+
+    monkeypatch.setattr(merge, "ensure_segments", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        add_generation(spark, out, half2, partitions=4, batch_id=7)
+    monkeypatch.undo()
 
     ix = IndexReader(spark, out, use_segments=True)
     assert not ix.segments_cover_all()
@@ -277,7 +283,7 @@ def test_point_in_time_reader_snapshot(spark, tmp_path_factory):
 
     before = top(pit)
 
-    add_generation(spark, out, half2, partitions=4, with_segments=False)
+    add_generation(spark, out, half2, partitions=4)
 
     # the PIT reader still sees exactly the old snapshot
     assert pit.generations == [0]

@@ -75,7 +75,7 @@ def test_pit_pins_commit(spark, index_sf0001, tmp_path):
     extra = (pages_from_documents(spark, f"{TESTDATA}/sf0.001")
              .limit(20)
              .withColumn("url", F.concat(F.lit("zz-"), F.col("url"))))
-    add_generation(spark, out, extra, partitions=2, with_segments=False)
+    add_generation(spark, out, extra, partitions=2)
 
     live = IndexReader(spark, out)
     pinned = pit_reader(spark, pit)

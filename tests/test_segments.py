@@ -1,6 +1,5 @@
 """Packed segments: encode/decode round trip, position-free blocks,
-block-max WAND exactness, salting, chunk-level resume, blocks in the
-earlier layouts (with positions; the retired varint format)."""
+block-max WAND exactness, salting, chunk-level resume."""
 
 import json
 import os
@@ -39,6 +38,7 @@ def _build_blocks(spark, ix, rows, n_docs, salt_target):
     """Write `rows` as an index's row postings + stats and encode them
     with build_segments; returns (segments meta, postings DataFrame)."""
     from pyspark.sql import functions as F
+    from sparksearch.build import INDEX_VERSION
     from sparksearch.segments import build_segments
 
     post = (spark.createDataFrame(
@@ -46,7 +46,8 @@ def _build_blocks(spark, ix, rows, n_docs, salt_target):
               "dl_q bigint")
         .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(4))))
     with open(f"{ix}/meta.json", "w") as f:
-        json.dump({"n_docs": n_docs, "stats_path": "stats"}, f)
+        json.dump({"version": INDEX_VERSION, "n_docs": n_docs,
+                   "next_docid": n_docs, "stats_path": "stats"}, f)
     post.groupBy("term").agg(F.count("*").alias("df")) \
         .write.parquet(f"{ix}/stats")
     meta = build_segments(spark, ix, salt_target=salt_target, n_chunks=2,
@@ -343,148 +344,3 @@ def test_fused_bool_all_zero_term_clauses(spark, seg_index):
     ex = Executor(IndexReader(spark, seg_index, use_segments=False))
     q = Bool(must=[Match("text", "...")], should=[Match("text", "!!")])
     assert ex.search(q, k=5, fetch=False).collect() == []
-
-
-def _write_legacy_blocks(index_dir: str, gens: list[int]) -> None:
-    """Hand-write block files in the retired varint format (BINARY
-    payload columns) and register them in segments_meta.json."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    table = pa.table({
-        "term": ["w2"], "salt": pa.array([0], pa.int32()),
-        "block_id": pa.array([0], pa.int32()),
-        "n": pa.array([2], pa.int32()),
-        "first_docid": pa.array([3], pa.int64()),
-        "last_docid": pa.array([7], pa.int64()),
-        "docids": [bytes([3, 4])], "tfs": [bytes([1, 2])],
-        "norms": [bytes([9, 9])], "positions": [bytes([0, 1, 4])],
-        "max_tf": pa.array([2], pa.int32()),
-        "min_dlq": pa.array([9], pa.int64()),
-    })
-    shutil.rmtree(f"{index_dir}/segments", ignore_errors=True)
-    for g in gens:
-        d = f"{index_dir}/segments/gen={g}/chunk=0/bucket=0"
-        os.makedirs(d)
-        pq.write_table(table, f"{d}/part-00000.parquet")
-    with open(f"{index_dir}/segments_meta.json", "w") as f:
-        json.dump({"generations": gens, "covers": gens,
-                   "gens": {str(g): {"postings": 2} for g in gens}}, f)
-
-
-def test_legacy_block_format_refused(spark, tmp_path):
-    """Segments in the retired varint format: auto and plan search run on
-    row postings, WAND, the reader's format check and merge raise
-    ValueError naming the rebuild, and the named rebuild restores WAND
-    and merge."""
-    from pyspark.sql import functions as F
-    from sparksearch.build import build_index
-    from sparksearch.corpus import synthesize_pages
-    from sparksearch.exec import Executor
-    from sparksearch.index import IndexReader
-    from sparksearch.merge import add_generation, merge_segments
-    from sparksearch.queries import Match
-    from sparksearch.segments import SegmentsReader, build_segments
-    from sparksearch.wand import wand_topk
-
-    ix = str(tmp_path / "legacy")
-    pages = synthesize_pages(spark, 400, seed=5, vocab=80, min_len=5,
-                             max_len=40, partitions=4)
-    build_index(pages.filter(F.crc32("url") % 2 == 0), ix, n_buckets=4,
-                partitions=4)
-    add_generation(spark, ix, pages.filter(F.crc32("url") % 2 == 1),
-                   partitions=4, with_segments=False)
-    _write_legacy_blocks(ix, [0, 1])
-
-    q = Match("text", "w2 w5 w9")
-    want = _topk(Executor(IndexReader(spark, ix)), q, 10, "plan")
-    assert len(want) == 10
-    seg = IndexReader(spark, ix, use_segments=True)
-    assert seg.segments.legacy_format and not seg.segments_cover_all()
-    assert _topk(Executor(seg), q, 10, "auto") == want
-    assert _topk(Executor(seg), q, 10, "plan") == want
-    with pytest.raises(ValueError, match=r"build_segments\(.*gen=g"):
-        wand_topk(seg, q, k=10)
-    with pytest.raises(ValueError, match="build_segments"):
-        SegmentsReader(spark, ix).require_current("decode")
-    with pytest.raises(ValueError, match="build_segments"):
-        merge_segments(spark, ix, partitions=4)
-
-    for g in (0, 1):
-        build_segments(spark, ix, gen=g, n_chunks=2, partitions=4)
-    seg = IndexReader(spark, ix, use_segments=True)
-    assert not seg.segments.legacy_format and seg.segments_cover_all()
-    assert _topk(Executor(seg), q, 10, "wand") == want
-    merge_segments(spark, ix, partitions=4)
-    assert _topk(Executor(IndexReader(spark, ix, use_segments=True)), q,
-                 10, "wand") == want
-
-
-def _add_positions_column(spark, index_dir: str, gen: int) -> None:
-    """Rewrite segment generation `gen` in the earlier block layout,
-    which also stored per-doc positions (`positions array<array<int>>`,
-    here 0..tf-1 for each doc), keeping its chunk/bucket layout and
-    manifests."""
-    from pyspark.sql import functions as F
-
-    gen_dir = f"{index_dir}/segments/gen={gen}"
-    tmp = f"{index_dir}/_old_layout"
-    (spark.read.parquet(gen_dir)
-     .withColumn("positions", F.transform(
-         "tfs", lambda tf: F.sequence(F.lit(0), tf - 1)))
-     .write.partitionBy("chunk", "bucket").parquet(tmp))
-    for d in os.listdir(gen_dir):
-        if d.startswith("chunk="):
-            shutil.rmtree(f"{gen_dir}/{d}")
-    for d in os.listdir(tmp):
-        if d.startswith("chunk="):
-            shutil.move(f"{tmp}/{d}", f"{gen_dir}/{d}")
-    shutil.rmtree(tmp)
-
-
-def test_mixed_block_layouts_serve_wand_and_merge(spark, tmp_path):
-    """A generation of blocks in the earlier layout (with a `positions`
-    column) next to a position-free one: WAND reads neither generation's
-    positions and equals the row plan, and merge_segments writes
-    position-free blocks that still equal it."""
-    import re
-    from pyspark.sql import functions as F
-    from sparksearch.build import build_index
-    from sparksearch.corpus import synthesize_pages
-    from sparksearch.exec import Executor
-    from sparksearch.index import IndexReader
-    from sparksearch.merge import add_generation, merge_segments
-    from sparksearch.queries import Match
-    from sparksearch.segments import build_segments
-
-    ix = str(tmp_path / "mixed")
-    pages = synthesize_pages(spark, 400, seed=9, vocab=80, min_len=5,
-                             max_len=40, partitions=4)
-    build_index(pages.filter(F.crc32("url") % 2 == 0), ix, n_buckets=4,
-                partitions=4)
-    build_segments(spark, ix, salt_target=64, n_chunks=2, partitions=4)
-    _add_positions_column(spark, ix, 0)
-    add_generation(spark, ix, pages.filter(F.crc32("url") % 2 == 1),
-                   partitions=4, salt_target=64, n_chunks=2)
-    assert "positions" in spark.read.parquet(
-        f"{ix}/segments/gen=0").columns
-    assert "positions" not in spark.read.parquet(
-        f"{ix}/segments/gen=1").columns
-
-    queries = [Match("text", "w2 w5 w9"), Match("text", "w1"),
-               Match("text", "w3 w4", operator="and")]
-    row_ex = Executor(IndexReader(spark, ix))
-    want = [_topk(row_ex, q, 10, "plan") for q in queries]
-    seg_ex = Executor(IndexReader(spark, ix, use_segments=True))
-    assert seg_ex.ix.segments_cover_all()
-    assert [_topk(seg_ex, q, 10, "wand") for q in queries] == want
-    plan = _plan_str(seg_ex.search(queries[0], k=10, mode="wand"))
-    schemas = re.findall(r"ReadSchema: (struct<[^ ]*)", plan)
-    assert schemas and not any("positions" in r for r in schemas), schemas
-
-    seg_meta = merge_segments(spark, ix, partitions=4, salt_target=64)
-    (g,) = seg_meta["generations"]
-    assert "positions" not in spark.read.parquet(
-        f"{ix}/segments/gen={g}").columns
-    seg_ex = Executor(IndexReader(spark, ix, use_segments=True))
-    assert [_topk(seg_ex, q, 10, "wand") for q in queries] == want
